@@ -46,15 +46,10 @@ shared MANIFEST commit-point discipline of ``operators/segstore.py``):
   the build's shingle width (a probe with a different n would verify
   against incomparable sets).
 
-Segment discipline (shared with invindex): one ingest batch = one
-segment partition; a caller-supplied deterministic segment name makes
-the write a dynamic partition overwrite, so at-least-once replay
-(foreachBatch) replaces the batch instead of double-counting it.
-``update_dedup_index(..., replace=True)`` is the refresh path: live
-copies of the batch's doc_ids in OTHER segments are tombstoned first,
-then the batch lands as its own segment — the upsert a dedup-refresh
-pipeline needs when documents change.  Single sequential writer,
-concurrent readers (Lucene's IndexWriter contract).
+The segment lifecycle (replay-safe named segments, tombstones,
+MANIFEST commit points) is ``operators/segstore.py``'s;
+``update_dedup_index(..., replace=True)`` is the refresh path a
+dedup-refresh pipeline needs when documents change.
 
 The probe is value-identical to ``incremental_dedup(hashed=True)``
 over the same live corpus (tested, and driver-graded via a DuckDB
@@ -74,7 +69,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,15 +82,18 @@ from redis_streams_spark.operators.dedup import (
     normalized_text,
 )
 from redis_streams_spark.operators.segstore import (
+    TREE,
+    Family,
+    Store,
+    build_generation,
+    compact_generation,
     drop_dead,
     drop_segment_metadata,
     gc_generations,
-    next_generation,
     open_index,
+    persist_verdicts,
     read_manifest,
-    read_optional as _read_optional,
-    require_managed,
-    write_manifest,
+    read_optional,
 )
 
 __all__ = [
@@ -122,8 +119,6 @@ N_BUCKETS = 64
 # anyway and skip the extra candidate materialization it costs.
 _PRUNE_BATCH_LIMIT = 4 * N_BUCKETS
 
-_STORES = ("digests", "bands", "shingles")
-
 # The shingle store keeps h32 hashes offset-cast to INT32 — an
 # injective transform of the h32 longs, so set equality (hence exact
 # Jaccard) is unchanged while the store drops from 998 MB (longs) to
@@ -135,16 +130,27 @@ _I32_OFFSET = 2_147_483_648
 def _sh_i32(col):
     return F.transform(col, lambda x: (x - F.lit(_I32_OFFSET)).cast("int"))
 
-_SCHEMAS = {
-    "digests": "doc_id BIGINT, content_hash STRING, bucket INT, segment STRING",
-    "bands": (
-        "doc_id BIGINT, band_idx INT, band_hash BIGINT, "
-        "bucket INT, segment STRING"
-    ),
-    "shingles": (
-        "doc_id BIGINT, sh ARRAY<INT>, bucket INT, segment STRING"
-    ),
-}
+
+# No negative partials: a tombstone row silences a document in all
+# three stores (they share the (doc_id, segment) key).
+_FAMILY = Family(
+    stores={
+        "digests": Store(
+            "doc_id BIGINT, content_hash STRING, bucket INT, segment STRING",
+            key="bucket",
+        ),
+        "bands": Store(
+            "doc_id BIGINT, band_idx INT, band_hash BIGINT, "
+            "bucket INT, segment STRING",
+            key="bucket",
+        ),
+        "shingles": Store(
+            "doc_id BIGINT, sh ARRAY<INT>, bucket INT, segment STRING",
+            key="bucket",
+        ),
+    },
+    id_col="doc_id",
+)
 
 
 # ------------------------------------------------------------------- meta
@@ -168,33 +174,10 @@ def _read_meta_dict(path: str) -> dict:
     return {"n": int(d["n"]), "shingles": bool(d.get("shingles", True))}
 
 
-def _read_meta(path: str) -> int:
-    return _read_meta_dict(path)["n"]
-
-
-
-
-def _read_store(spark: SparkSession, gpath: str, sub: str) -> DataFrame:
-    df = _read_optional(spark, f"{gpath}/{sub}")
-    if df is None:
-        return spark.createDataFrame([], _SCHEMAS[sub])
-    return df
-
-
-def _tombstones(spark: SparkSession, gpath: str) -> DataFrame | None:
-    t = _read_optional(spark, f"{gpath}/tombstones")
-    return None if t is None else t.select("doc_id", "segment")
-
-
 def _live(df: DataFrame, dead: list[str], tomb: DataFrame | None) -> DataFrame:
     """Live rows of a store frame: drop manifest-dead segments (a
-    partition-pruned NOT-IN) and tombstoned (doc_id, segment) rows (a
-    broadcast anti-join — the tombstone frame is deletion-churn
-    sized)."""
-    df = drop_dead(df, dead)
-    if tomb is None:
-        return df
-    return df.join(F.broadcast(tomb), ["doc_id", "segment"], "left_anti")
+    partition-pruned NOT-IN) and tombstoned (doc_id, segment) rows."""
+    return _FAMILY.live(drop_dead(df, dead), tomb)
 
 
 # ------------------------------------------------------------------ build
@@ -203,55 +186,32 @@ def _live(df: DataFrame, dead: list[str], tomb: DataFrame | None) -> DataFrame:
 def _write_segment(
     docs: DataFrame,
     gpath: str,
-    mode: str,
+    write: str,
     segment: str,
     n: int,
-    dynamic: bool = False,
     store_shingles: bool = True,
 ) -> None:
     """Write one document batch's digest/band/shingle rows as segment
     ``segment``.  One shingle pass feeds both the band build and the
-    shingle store (persisted); each store is repartitioned on its
-    bucket column so a bucket's files come from one task set.  Dynamic
-    partition overwrite (deterministic segment names) replaces ONLY
-    this segment's partitions — the at-least-once replay mechanism;
-    the initial build stays STATIC so it clears any previous tree."""
-    owm = ("partitionOverwriteMode", "dynamic" if dynamic else "static")
+    shingle store (persisted)."""
     digests = docs.select(
         "doc_id", F.md5(normalized_text()).alias("content_hash")
     ).withColumn("bucket", (h32("content_hash") % N_BUCKETS).cast("int"))
     sets_ = hashed_shingle_sets(docs, n).persist()
     try:
-        (
-            digests.withColumn("segment", F.lit(segment))
-            .repartition("bucket")
-            .write.mode(mode)
-            .option(*owm)
-            .partitionBy("segment", "bucket")
-            .parquet(f"{gpath}/digests")
-        )
-        (
-            band_rows_from_hashes(sets_)
-            .withColumn("bucket", F.pmod("band_hash", F.lit(N_BUCKETS)).cast("int"))
-            .withColumn("segment", F.lit(segment))
-            .repartition("bucket")
-            .write.mode(mode)
-            .option(*owm)
-            .partitionBy("segment", "bucket")
-            .parquet(f"{gpath}/bands")
+        _FAMILY.write(digests, gpath, "digests", write, segment)
+        _FAMILY.write(
+            band_rows_from_hashes(sets_).withColumn(
+                "bucket", F.pmod("band_hash", F.lit(N_BUCKETS)).cast("int")
+            ),
+            gpath, "bands", write, segment,
         )
         if store_shingles:
-            (
-                sets_.select("doc_id", _sh_i32("sh").alias("sh"))
-                .withColumn(
+            _FAMILY.write(
+                sets_.select("doc_id", _sh_i32("sh").alias("sh")).withColumn(
                     "bucket", F.pmod("doc_id", F.lit(N_BUCKETS)).cast("int")
-                )
-                .withColumn("segment", F.lit(segment))
-                .repartition("bucket")
-                .write.mode(mode)
-                .option(*owm)
-                .partitionBy("segment", "bucket")
-                .parquet(f"{gpath}/shingles")
+                ),
+                gpath, "shingles", write, segment,
             )
     finally:
         sets_.unpersist()
@@ -269,22 +229,12 @@ def build_dedup_index(
     path.  ``managed=True`` creates the MANIFEST-committed multi-
     generation root (compaction becomes a pointer flip, retention a
     manifest edit)."""
-    if managed:
-        os.makedirs(path, exist_ok=True)
-        gen = "g00000001"
-        gpath = os.path.join(path, gen)
-        _write_segment(
-            docs, gpath, "overwrite", "base", n,
-            store_shingles=store_shingles,
-        )
+
+    def write(gpath: str) -> None:
+        _write_segment(docs, gpath, TREE, "base", n, store_shingles)
         _write_meta(path, n, shingles=store_shingles)
-        write_manifest(path, gen)
-        return gpath
-    _write_segment(
-        docs, path, "overwrite", "base", n, store_shingles=store_shingles
-    )
-    _write_meta(path, n, shingles=store_shingles)
-    return path
+
+    return build_generation(path, managed, write)
 
 
 def init_dedup_index(
@@ -299,15 +249,12 @@ def init_dedup_index(
     retention, gc) if the root is managed from the start.  Returns the
     generation path writes should land in (resolved by the ordinary
     maintenance ops, so callers never use it directly)."""
-    os.makedirs(path, exist_ok=True)
-    _write_meta(path, n, shingles=store_shingles)
-    if not managed:
-        return path
-    gen = "g00000001"
-    gpath = os.path.join(path, gen)
-    os.makedirs(gpath, exist_ok=True)
-    write_manifest(path, gen)
-    return gpath
+
+    def write(gpath: str) -> None:
+        _write_meta(path, n, shingles=store_shingles)
+        os.makedirs(gpath, exist_ok=True)
+
+    return build_generation(path, managed, write)
 
 
 def update_dedup_index(
@@ -331,88 +278,20 @@ def update_dedup_index(
     changed document stops it matching its own stale copy.  Replay
     recomputes identical corrections: the delete pass ignores this
     batch's own prior tombstones and its own segment."""
-    from redis_streams_spark.operators.segstore import (
-        check_segment_name,
-        clear_segment_partitions,
-    )
 
-    spark = docs_new.sparkSession
-    gpath, dead = open_index(path)
-    seg = segment if segment is not None else uuid.uuid4().hex[:12]
-    check_segment_name(seg, "update_dedup_index")
-    if seg in dead or f"{seg}.del" in dead:
-        raise ValueError(
-            f"update_dedup_index: segment {seg!r} is dead in the "
-            "MANIFEST — its partitions are invisible to readers; pick "
-            "a fresh segment name"
-        )
-    if replace:
-        _apply_delete(
-            spark,
-            gpath,
-            docs_new.select("doc_id").distinct(),
-            tseg=f"{seg}.del",
-            exclude_segment=seg,
-            dead=dead,
-        )
-    meta = _read_meta_dict(path)
-    n, sh = meta["n"], meta["shingles"]
-    if segment is not None:
-        # a named segment may be a replay OR a re-ingest of CHANGED
-        # content; the digest/band buckets derive from content hashes,
-        # so a changed batch writes a DIFFERENT partition set and the
-        # old content's buckets would linger live — clear them first
-        # (r11 advice — see segstore.clear_segment_partitions)
-        clear_segment_partitions(gpath, _STORES, seg)
+    def write_batch(gpath: str, seg: str, write: str) -> None:
+        meta = _read_meta_dict(path)
         _write_segment(
-            docs_new, gpath, "overwrite", seg, n, dynamic=True,
-            store_shingles=sh,
+            docs_new, gpath, write, seg, meta["n"], meta["shingles"]
         )
-    else:
-        _write_segment(docs_new, gpath, "append", seg, n, store_shingles=sh)
+
+    _FAMILY.ingest(
+        docs_new, path, segment, "update_dedup_index", write_batch,
+        replace=replace,
+    )
 
 
 # ----------------------------------------------------------------- delete
-
-
-def _apply_delete(
-    spark: SparkSession,
-    gpath: str,
-    ids: DataFrame,
-    tseg: str,
-    exclude_segment: str | None = None,
-    dead: list[str] = (),
-) -> None:
-    """Tombstone the LIVE copies of ``ids`` as delete batch ``tseg``:
-    (doc_id, segment) rows naming the digest/band/shingle partitions
-    now dead — all three stores share the (doc_id, segment) key, so
-    one tombstone row silences a document everywhere.  Liveness is
-    computed from ``digests/`` alone (every copy of a doc has exactly
-    one digest row) against the current state minus this batch's own
-    prior output, which makes replay — and dynamic-overwrite replace —
-    recompute identical corrections instead of compounding them."""
-    digests = _read_optional(spark, f"{gpath}/digests")
-    if digests is None:
-        return  # empty index (first replace-mode batch)
-    digests = drop_dead(digests, list(dead))
-    if exclude_segment is not None:
-        digests = digests.where(F.col("segment") != exclude_segment)
-    prev = _read_optional(spark, f"{gpath}/tombstones")
-    if prev is not None:
-        prev = prev.where(F.col("tseg") != tseg).select("doc_id", "segment")
-    live = _live(
-        digests.join(ids.hint("broadcast"), "doc_id", "semi"), [], prev
-    )
-    (
-        live.select("doc_id", "segment")
-        .distinct()
-        .withColumn("tseg", F.lit(tseg))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("tseg")
-        .parquet(f"{gpath}/tombstones")
-    )
 
 
 def delete_from_dedup_index(
@@ -427,16 +306,9 @@ def delete_from_dedup_index(
     deterministic name for replay-safe streaming deletes).  Probes
     immediately stop matching the dead documents — value-identical to
     a rebuild over the survivors (tested); ``compact_dedup_index``
-    later drops the rows physically."""
-    gpath, dead = open_index(path)
-    if isinstance(delete_ids, DataFrame):
-        ids = delete_ids.select("doc_id").distinct()
-    else:
-        ids = spark.createDataFrame(
-            [(int(i),) for i in delete_ids], "doc_id BIGINT"
-        )
-    tseg = segment if segment is not None else "del-" + uuid.uuid4().hex[:12]
-    _apply_delete(spark, gpath, ids, tseg=tseg, dead=dead)
+    later drops the rows physically.  Liveness comes from ``digests/``
+    (every copy of a doc has exactly one digest row)."""
+    _FAMILY.delete(spark, path, delete_ids, segment)
 
 
 # ------------------------------------------------------------------ probe
@@ -552,12 +424,12 @@ def _probe_frames(
         )
     elif verify not in ("exact", "minhash"):
         raise ValueError(f"probe_dedup_index: unknown verify {verify!r}")
-    tomb = _tombstones(spark, gpath)
+    tomb = _FAMILY.tombstones(spark, gpath)
 
     bnorm = batch.select(
         "doc_id", F.md5(normalized_text()).alias("content_hash")
     )
-    hdig = _live(_read_store(spark, gpath, "digests"), dead, tomb)
+    hdig = _live(_FAMILY.read(spark, gpath, "digests"), dead, tomb)
     exact = (
         bnorm.join(
             hdig.select(F.col("doc_id").alias("h_id"), "content_hash"),
@@ -574,7 +446,7 @@ def _probe_frames(
         # minhash verify reads it once — nothing to share, no persist
         bsets = bsets.persist()
         persisted.append(bsets)
-    hbands = _live(_read_store(spark, gpath, "bands"), dead, tomb)
+    hbands = _live(_FAMILY.read(spark, gpath, "bands"), dead, tomb)
     bjoin = band_rows_from_hashes(bsets).join(
         hbands.select(
             F.col("doc_id").alias("h_id"), "band_idx", "band_hash"
@@ -604,7 +476,7 @@ def _probe_frames(
         out = _verdict_frame(batch, exact, near)
         return out, persisted
     cands = bjoin.select("doc_id", "h_id").distinct()
-    hsh = _read_store(spark, gpath, "shingles")
+    hsh = _FAMILY.read(spark, gpath, "shingles")
     # Candidate-bucket pruning is a SMALL-BATCH optimization: a bounded
     # collect (≤ N_BUCKETS rows) of the candidates' distinct doc_id
     # buckets becomes the verify scan's partition IN-filter, so a
@@ -717,19 +589,7 @@ def dedup_ingest_batch(
         batch, path, threshold=threshold, exclude_segment=segment
     )
     try:
-        (
-            verdicts.withColumn("segment", F.lit(segment))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("segment")
-            .parquet(verdicts_path)
-        )
-        stored = (
-            batch.sparkSession.read.parquet(verdicts_path)
-            .where(F.col("segment") == segment)
-            .drop("segment")
-        )
+        stored = persist_verdicts(verdicts, verdicts_path, segment)
         keepers = batch.join(
             stored.where(F.col("verdict") == "keep").select("doc_id"), "doc_id"
         )
@@ -759,33 +619,20 @@ def compact_dedup_index(
     reclaims the old generation after the drain window.  Returns the
     compacted data path (the new generation dir for managed, ``dst``
     otherwise)."""
-    gpath, dead = open_index(src)
-    man = read_manifest(src)
-    if dst is None:
-        if man is None:
-            raise ValueError(
-                "compact_dedup_index: pass dst=... for an unmanaged "
-                "index, or build with managed=True for in-place "
-                "generational compaction"
+    meta = _read_meta_dict(src)
+
+    def write(gpath: str, dead: list[str], out: str) -> None:
+        tomb = _FAMILY.tombstones(spark, gpath)
+        for sub in _FAMILY.stores:
+            if sub == "shingles" and not meta["shingles"]:
+                continue  # the byte-budget opt-out survives compaction
+            _FAMILY.write(
+                _live(_FAMILY.read(spark, gpath, sub), dead, tomb),
+                out, sub, TREE, "base",
             )
-        gen = next_generation(src)
-        out = os.path.join(src, gen)
-    else:
-        out = dst
-    tomb = _tombstones(spark, gpath)
-    for sub in _STORES:
-        (
-            _live(_read_store(spark, gpath, sub), dead, tomb)
-            .withColumn("segment", F.lit("base"))
-            .repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("segment", "bucket")
-            .parquet(f"{out}/{sub}")
-        )
-    _write_meta(out if dst is not None else src, _read_meta(src))
-    if dst is None:
-        write_manifest(src, gen)
-    return out
+        _write_meta(src if dst is None else dst, meta["n"], meta["shingles"])
+
+    return compact_generation(src, dst, "compact_dedup_index", write)
 
 
 def drop_dedup_segment(spark: SparkSession, path: str, segment: str) -> None:
@@ -799,34 +646,29 @@ def drop_dedup_segment(spark: SparkSession, path: str, segment: str) -> None:
     dead segment is a harmless no-op, and dropping a replace-batch
     leaves its explicitly-killed older copies dead — the right
     retention semantics (a replaced document was superseded, not
-    resurrected).  DELETE batches themselves are refused (r11 review
-    finding): the manifest dead-list governs the three stores' segment
-    partitions, not the tombstone tseg partitions, so "dropping" a
-    delete batch would report success while its deletions stayed in
-    force — compaction is the way to retire tombstones."""
-    man = require_managed(path, "drop_dedup_segment")
-    if segment in man["dead"]:
-        return  # idempotent
-    gpath = os.path.join(path, man["generation"])
-    t = _read_optional(spark, f"{gpath}/tombstones")
-    if t is not None and t.where(F.col("tseg") == segment).limit(1).count() > 0:
-        raise ValueError(
-            f"drop_dedup_segment: {segment!r} is a delete batch — its "
-            "tombstones live outside the manifest's segment partitions "
-            "and would stay in force; compact_dedup_index retires them"
-        )
-    drop_segment_metadata(path, segment)
+    resurrected).  DELETE batches themselves are refused: the manifest
+    dead-list governs the three stores' segment partitions, not the
+    tombstone tseg partitions, so "dropping" a delete batch would
+    report success while its deletions stayed in force — compaction is
+    the way to retire tombstones."""
+
+    def check(gpath: str) -> None:
+        t = read_optional(spark, f"{gpath}/tombstones")
+        if t is not None and t.where(F.col("tseg") == segment).limit(1).count():
+            raise ValueError(
+                f"drop_dedup_segment: {segment!r} is a delete batch — its "
+                "tombstones live outside the manifest's segment partitions "
+                "and would stay in force; compact_dedup_index retires them"
+            )
+
+    drop_segment_metadata(path, segment, "drop_dedup_segment", check)
 
 
 def gc_dedup_index(path: str, force: bool = False) -> list[str]:
     """Reclaim unreferenced storage of a managed root (generic
     segstore gc over this index's stores + tombstones); run after the
     reader-drain window."""
-    # tombstone trees are partitioned by tseg, not segment, and delete
-    # batches cannot be dropped (see drop_dedup_segment) — dead
-    # tombstone partitions cannot exist, so gc walks only the stores;
-    # old GENERATIONS (with their tombstones) are reclaimed whole
-    return gc_generations(path, _STORES, force=force)
+    return gc_generations(path, tuple(_FAMILY.stores), force=force)
 
 
 def dedup_index_maintenance_advice(
@@ -871,8 +713,8 @@ def dedup_index_status(spark: SparkSession, path: str) -> DataFrame:
     the maintenance dashboard (which batches exist, how much deletion
     churn has accumulated toward the next compaction)."""
     gpath, dead = open_index(path)
-    dig = drop_dead(_read_store(spark, gpath, "digests"), dead)
-    tomb = _tombstones(spark, gpath)
+    dig = drop_dead(_FAMILY.read(spark, gpath, "digests"), dead)
+    tomb = _FAMILY.tombstones(spark, gpath)
     per = dig.groupBy("segment").agg(F.count(F.lit(1)).alias("n_docs"))
     if tomb is None:
         return per.withColumn("n_tombstoned", F.lit(0).cast("long")).orderBy(

@@ -52,16 +52,19 @@ from redis_streams_spark.operators.dedup import (
     spans_from_hits,
 )
 from redis_streams_spark.operators.segstore import (
-    check_segment_name,
-    clear_segment_partitions,
+    TREE,
+    Family,
+    Store,
+    build_generation,
+    compact_generation,
     drop_dead,
     drop_segment_metadata,
     gc_generations,
-    next_generation,
+    is_delete_batch,
     open_index,
-    read_manifest,
-    read_optional as _read_optional,
-    write_manifest,
+    persist_verdicts,
+    read_optional,
+    refuse_dead,
 )
 
 __all__ = [
@@ -78,7 +81,14 @@ __all__ = [
 
 N_BUCKETS = 64
 _META_FILE = "INDEXMETA"
-_STORES = ("grams",)
+# deletes write NEGATIVE count partials — no tombstones, no row ids
+_FAMILY = Family(
+    stores={
+        "grams": Store(
+            "g BIGINT, cnt BIGINT, bucket INT, segment STRING", key="bucket"
+        )
+    }
+)
 
 
 def _write_meta(path: str, n: int) -> None:
@@ -107,21 +117,13 @@ def _gram_counts(docs: DataFrame, n: int, negate: bool = False) -> DataFrame:
 def _write_segment(
     docs: DataFrame,
     gpath: str,
-    mode: str,
+    write: str,
     segment: str,
     n: int,
-    dynamic: bool = False,
     negate: bool = False,
 ) -> None:
-    owm = ("partitionOverwriteMode", "dynamic" if dynamic else "static")
-    (
-        _gram_counts(docs, n, negate=negate)
-        .withColumn("segment", F.lit(segment))
-        .repartition("bucket")
-        .write.mode(mode)
-        .option(*owm)
-        .partitionBy("segment", "bucket")
-        .parquet(f"{gpath}/grams")
+    _FAMILY.write(
+        _gram_counts(docs, n, negate=negate), gpath, "grams", write, segment
     )
 
 
@@ -132,17 +134,12 @@ def build_gram_index(
     (doc_id, text) as segment ``base``; returns the generation path.
     ``managed=True`` creates the MANIFEST-committed multi-generation
     root."""
-    if managed:
-        os.makedirs(path, exist_ok=True)
-        gen = "g00000001"
-        gpath = os.path.join(path, gen)
-        _write_segment(docs, gpath, "overwrite", "base", n)
+
+    def write(gpath: str) -> None:
+        _write_segment(docs, gpath, TREE, "base", n)
         _write_meta(path, n)
-        write_manifest(path, gen)
-        return gpath
-    _write_segment(docs, path, "overwrite", "base", n)
-    _write_meta(path, n)
-    return path
+
+    return build_generation(path, managed, write)
 
 
 def update_gram_index(
@@ -151,20 +148,16 @@ def update_gram_index(
     """Append one ingest batch's gram-count partial as its own segment.
     Deterministic names make the write a replay-safe dynamic partition
     overwrite; merged counts immediately include the batch."""
-    gpath, dead = open_index(path)
     n = read_gram_meta(path)["n"]
-    seg = segment if segment is not None else uuid.uuid4().hex[:12]
-    check_segment_name(seg, "update_gram_index")
-    if seg in dead:
-        raise ValueError(
-            f"update_gram_index: segment {seg!r} is dead in the "
-            "MANIFEST — pick a fresh segment name"
-        )
-    if segment is not None:
-        clear_segment_partitions(gpath, _STORES, seg)
-        _write_segment(docs_new, gpath, "overwrite", seg, n, dynamic=True)
-    else:
-        _write_segment(docs_new, gpath, "append", seg, n)
+    _FAMILY.ingest(
+        docs_new,
+        path,
+        segment,
+        "update_gram_index",
+        lambda gpath, seg, write: _write_segment(
+            docs_new, gpath, write, seg, n
+        ),
+    )
 
 
 def delete_from_gram_index(
@@ -182,10 +175,10 @@ def delete_from_gram_index(
     gpath, dead = open_index(path)
     n = read_gram_meta(path)["n"]
     seg = segment if segment is not None else "del-" + uuid.uuid4().hex[:12]
-    if not (seg.startswith("del-") or seg.endswith(".del")):
+    if not is_delete_batch(seg):
         # the reserved namespace is the entanglement detector's ONLY
         # signal (drop_gram_segment classifies delete segments by
-        # prefix) — a negative partial outside it would let a later
+        # name) — a negative partial outside it would let a later
         # drop silently skew net counts in both directions, so the
         # reservation is enforced at write time, mirroring
         # check_segment_name's mirror-image guard on ingest names
@@ -194,26 +187,21 @@ def delete_from_gram_index(
             "the reserved delete-batch namespace ('del-*' or '*.del') "
             "so entanglement checks can classify it"
         )
-    if seg in dead:
-        raise ValueError(
-            f"delete_from_gram_index: segment {seg!r} is dead in the "
-            "MANIFEST — pick a fresh segment name"
-        )
-    clear_segment_partitions(gpath, _STORES, seg)
-    _write_segment(docs_removed, gpath, "overwrite", seg, n, dynamic=True,
-                   negate=True)
+    refuse_dead(seg, dead, "delete_from_gram_index")
+    _FAMILY.rewrite_segment(
+        gpath,
+        seg,
+        lambda gpath, seg, write: _write_segment(
+            docs_removed, gpath, write, seg, n, negate=True
+        ),
+    )
 
 
 def _live_counts(
     spark: SparkSession, gpath: str, dead: list[str],
     exclude_segment: str | None = None,
 ) -> DataFrame:
-    g = _read_optional(spark, f"{gpath}/grams")
-    if g is None:
-        return spark.createDataFrame(
-            [], "g BIGINT, cnt BIGINT, bucket INT, segment STRING"
-        )
-    g = drop_dead(g, dead)
+    g = drop_dead(_FAMILY.read(spark, gpath, "grams"), dead)
     if exclude_segment is not None:
         g = g.where(F.col("segment") != exclude_segment)
     return g
@@ -289,18 +277,7 @@ def ingest_gram_batch(
     spans = probe_gram_spans(
         batch, path, min_count=min_count, exclude_segment=segment
     )
-    (
-        spans.withColumn("segment", F.lit(segment))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("segment")
-        .parquet(verdicts_path)
-    )
-    stored = (
-        batch.sparkSession.read.parquet(verdicts_path)
-        .where(F.col("segment") == segment)
-        .drop("segment")
-    )
+    stored = persist_verdicts(spans, verdicts_path, segment, one_file=False)
     update_gram_index(batch, path, segment=segment)
     return stored
 
@@ -311,39 +288,20 @@ def compact_gram_index(
     """Net all live partials (negative delete mass summed away, zero
     rows dropped) into one ``base`` segment in the next generation;
     flip the MANIFEST last."""
-    gpath, dead = open_index(src)
-    man = read_manifest(src)
     n = read_gram_meta(src)["n"]
-    if dst is None:
-        if man is None:
-            raise ValueError(
-                "compact_gram_index: pass dst=... for an unmanaged "
-                "index, or build with managed=True"
-            )
-        gen = next_generation(src)
-        out = os.path.join(src, gen)
-    else:
-        out = dst
-    net = (
-        _live_counts(spark, gpath, dead)
-        .groupBy("g")
-        .agg(F.sum("cnt").alias("cnt"))
-        .where(F.col("cnt") != 0)
-        .withColumn("bucket", F.pmod("g", F.lit(N_BUCKETS)).cast("int"))
-        .withColumn("segment", F.lit("base"))
-    )
-    (
-        net.repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("segment", "bucket")
-        .parquet(f"{out}/grams")
-    )
-    if dst is None:
-        write_manifest(src, gen)
-        _write_meta(src, n)
-    else:
-        _write_meta(dst, n)
-    return out
+
+    def write(gpath: str, dead: list[str], out: str) -> None:
+        net = (
+            _live_counts(spark, gpath, dead)
+            .groupBy("g")
+            .agg(F.sum("cnt").alias("cnt"))
+            .where(F.col("cnt") != 0)
+            .withColumn("bucket", F.pmod("g", F.lit(N_BUCKETS)).cast("int"))
+        )
+        _FAMILY.write(net, out, "grams", TREE, "base")
+        _write_meta(src if dst is None else dst, n)
+
+    return compact_generation(src, dst, "compact_gram_index", write)
 
 
 def drop_gram_segment(spark: SparkSession, path: str, segment: str) -> None:
@@ -355,34 +313,33 @@ def drop_gram_segment(spark: SparkSession, path: str, segment: str) -> None:
     Idempotent for already-dropped segments (matching
     ``drop_vector_segment``'s contract): a retried retention job that
     partially applied converges instead of erroring."""
-    man = read_manifest(path)
-    if man is not None and segment in man["dead"]:
-        return  # already dropped — idempotent retry
-    gpath, dead = open_index(path)
-    g = _read_optional(spark, f"{gpath}/grams")
-    if g is not None:
+
+    def check(gpath: str) -> None:
+        g = read_optional(spark, f"{gpath}/grams")
+        if g is None:
+            return
+        _, dead = open_index(path)
         live_segs = {
             r["segment"]
             for r in drop_dead(g, dead).select("segment").distinct().collect()
         }
         if segment not in live_segs:
-            raise ValueError(
-                f"drop_gram_segment: no live segment {segment!r}"
-            )
-        dels = {s for s in live_segs if s.startswith("del-")}
+            raise ValueError(f"drop_gram_segment: no live segment {segment!r}")
+        dels = {s for s in live_segs if is_delete_batch(s)}
         if dels:
             raise ValueError(
                 "drop_gram_segment: delete segments "
                 f"{sorted(dels)} are live — their negative counts "
                 "entangle every segment; compact_gram_index first"
             )
-    drop_segment_metadata(path, segment)
+
+    drop_segment_metadata(path, segment, "drop_gram_segment", check)
 
 
 def gc_gram_index(path: str, force: bool = False) -> list[str]:
     """Delete dead generations'/segments' files (manifest flips leave
     them behind by design — readers drain first)."""
-    return gc_generations(path, _STORES, force=force)
+    return gc_generations(path, tuple(_FAMILY.stores), force=force)
 
 
 def gram_index_status(spark: SparkSession, path: str) -> DataFrame:

@@ -3,76 +3,45 @@ twin of the persisted IVF cell store (operators/similarity.py::
 build_ivf_index): build once, query many, with scan cost following the
 QUERY's term list instead of the corpus.
 
-Layout under ``path`` (one index GENERATION; see the manifest section
-for the managed multi-generation layout):
+Stores of one index GENERATION (the segment lifecycle — replay-safe
+named segments, tombstones, MANIFEST commit points — is
+``operators/segstore.py``'s):
 
 - ``postings/`` — (tok, doc_id, tf, dl, positions) partitioned by
-  ``(segment, bucket)`` with ``bucket = h32(tok) % N_TERM_BUCKETS``.
-  The per-document length is DENORMALIZED into each posting row at
-  build time, so query-time scoring never joins the corpus-sized
-  doc-length table — the only corpus-sized work left at query time is
-  reading the probed buckets.  ``positions`` is the sorted 1-based
-  token-position list (tf = its size), making the index POSITIONAL:
-  phrase adjacency is an in-row array intersect at query time.
+  ``(segment, bucket)`` with ``bucket = h32(tok) % n_term_buckets``
+  (pinned per generation in LAYOUT).  The per-document length is
+  DENORMALIZED into each posting row at build time, so query-time
+  scoring never joins the corpus-sized doc-length table — the only
+  corpus-sized work left at query time is reading the probed buckets.
+  ``positions`` is the sorted 1-based token-position list (tf = its
+  size), making the index POSITIONAL: phrase adjacency is an in-row
+  array intersect at query time.
 - ``terms/`` — per-term PARTIALS, same (segment, bucket) partitioning:
   document frequency ``df`` plus ``max_tf``, the segment's largest
   term frequency — the build-time ingredient of the MaxScore upper
   bound (see ``bm25_topk_maxscore``).
 - ``stats/`` — corpus-stat partials: (n docs, sum of doc lengths),
   one row per segment.
-- ``tombstones/`` — document DELETION partials (r10 verdict ask #1),
-  partitioned by ``tseg`` (the delete batch's own segment name); rows
-  are ``(doc_id, segment)`` — the EXACT postings segment a dead
-  document lived in.  Deletion never rewrites postings: the query
-  path drops dead rows with a broadcast anti-join on
-  (doc_id, segment), and the delete batch writes NEGATIVE df/stats
-  partials under its own segment so the existing read-time partial
-  sums net out the dead documents with zero query-path changes.
+- ``tombstones/`` — (doc_id, segment) rows naming the EXACT postings
+  segment a deleted document lived in.  Deletion never rewrites
+  postings: the query path drops dead rows with a broadcast anti-join,
+  and the delete batch writes NEGATIVE df/stats partials under its own
+  segment so the read-time partial sums net out the dead documents
+  with zero query-path changes.
 
-Segments follow the Lucene discipline: ``update_inverted_index`` adds
-a batch of documents as its own segment partition — no other segment
-is read or rewritten, so updates are safe while readers run and never
-touch corpus-sized data.  With a caller-supplied deterministic segment
-name the write is a DYNAMIC partition overwrite, so a re-delivered
-micro-batch (foreachBatch is at-least-once) replaces its own segment
-instead of double-counting it.  The query path merges partials at
-read time (df = sum per term over the probed buckets, avgdl = Σsum_dl /
-Σn — both bounded frames), which keeps queries value-identical to a
-from-scratch rebuild over the union corpus (tested).
-
-Document lifecycle (r11): a live doc_id belongs to exactly one
-segment.  ``delete_from_inverted_index`` tombstones documents;
-``update_inverted_index(..., replace=True)`` re-ingests changed
-documents (tombstone the old copy, add the new one as this batch's
-segment) — the dedup-refresh pipeline's upsert.  Both are replay-safe
-under the same deterministic-segment dynamic-overwrite discipline,
-assuming the sequential single-writer that foreachBatch provides
-(maintenance ops from one writer; queries are the concurrent
-readers — Lucene's IndexWriter contract).  ``compact_inverted_index``
-physically drops tombstoned rows and dead vocabulary.
-
-Manifest (r10 verdict ask #5, extended to a COMMIT POINT in r11): an
-index ROOT may be MANAGED — built with
-``build_inverted_index(..., managed=True)``, it holds generation
-subdirectories (``g00000001``, …) plus a ``MANIFEST`` file — JSON
-``{"generation": …, "dead": […], "pending": […]}`` — always written
-LAST via an atomic rename.  Every reader resolves the generation
-through it AND excludes the ``dead``/``pending`` segments with a
-partition-pruned NOT-IN, which buys three O(metadata) maintenance
-ops on top of pointer-flip compaction:
-
-- ``drop_segment`` — retention: an ingest batch disappears (postings,
-  df partials, corpus stats all at once) for the price of one
-  manifest flip — the index-side analog of the stream log's maxlen;
-- ``merge_segments`` — tiered merge: small segments collapse into one
-  (cost follows the merged batches, not the corpus), staged on
-  ``pending`` so readers see either the inputs or the merged output,
-  never both;
-- ``gc_index`` — reclaims swapped-out generations and dead segment
-  partitions after the reader-drain window.
-
-On local/HDFS filesystems the manifest rename is atomic; object
-stores need their conditional-put equivalent at the same seam.
+``update_inverted_index`` adds a batch of documents as its own segment
+— no other segment is read or rewritten, so updates are safe while
+readers run and never touch corpus-sized data.  The query path merges
+partials at read time (df = sum per term over the probed buckets,
+avgdl = Σsum_dl / Σn — both bounded frames), which keeps queries
+value-identical to a from-scratch rebuild over the union corpus
+(tested).  A live doc_id belongs to exactly one segment;
+``delete_from_inverted_index`` tombstones documents and
+``update_inverted_index(..., replace=True)`` re-ingests changed ones
+(the dedup-refresh pipeline's upsert).  ``compact_inverted_index``
+physically drops tombstoned rows and dead vocabulary; on a managed
+root ``drop_segment`` (retention), ``merge_segments`` (tiered merge)
+and ``gc_index`` are the O(metadata) maintenance ops.
 
 Query path: the query terms' buckets are computed driver-side with
 ``h32_py`` (the Python twin of the same md5 hash the build used), and
@@ -87,7 +56,6 @@ has no query layer)."""
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -95,6 +63,28 @@ from pyspark.sql import functions as F
 
 from redis_streams_spark.functions.hashing import h32, h32_py
 from redis_streams_spark.functions.rounding import rnd
+from redis_streams_spark.operators.segstore import (
+    SEGMENT,
+    TREE,
+    Family,
+    Store,
+    acquire_merge_lock,
+    build_generation,
+    compact_generation,
+    drop_dead,
+    drop_segment_metadata,
+    gc_generations,
+    open_index,
+    read_layout,
+    read_manifest,
+    read_optional,
+    release_merge_lock,
+    require_managed,
+    require_untangled,
+    resolve_index_path,
+    write_layout,
+    write_manifest,
+)
 
 __all__ = [
     "N_TERM_BUCKETS",
@@ -119,20 +109,47 @@ N_TERM_BUCKETS = 64
 _K1 = 1.2
 _B = 0.75
 
-# Manifest/generation machinery shared with the dedup-signature index
-# (operators/dupindex.py) — factored into operators/segstore.py in r11;
-# the private aliases keep this module's internal call sites and the
-# existing tests stable.
-from redis_streams_spark.operators.segstore import (  # noqa: E402
-    MANIFEST as _MANIFEST,
-    drop_dead as _drop_dead,
-    next_generation as _next_generation,
-    open_index as _open_index,
-    read_layout as _read_layout,
-    read_manifest as _read_manifest,
-    resolve_index_path,
-    write_layout as _write_layout,
-    write_manifest as _write_manifest,
+
+def _negative_partials(live: DataFrame, gpath: str, tseg: str) -> None:
+    """A delete batch's NEGATIVE df partials into ``terms/`` and
+    negative (n, sum_dl) partial into ``stats/`` under ``tseg``, so the
+    read-time partial sums net out the dead docs unchanged."""
+    _FAMILY.write(
+        live.groupBy("tok", "bucket").agg(
+            (-F.count(F.lit(1))).alias("df"),
+            # a dead doc may have held the segment max: 0 keeps the
+            # merged max_tf an upper bound (loose but sound)
+            F.lit(0).cast("long").alias("max_tf"),
+        ),
+        gpath, "terms", SEGMENT, tseg,
+    )
+    _FAMILY.write(
+        live.groupBy("doc_id")
+        .agg(F.min("dl").alias("dl"))
+        .agg(
+            (-F.count(F.lit(1))).cast("long").alias("n"),
+            (-F.coalesce(F.sum("dl"), F.lit(0))).cast("long").alias("sum_dl"),
+        )
+        .where(F.col("n") < 0),  # no live rows -> write nothing
+        gpath, "stats", SEGMENT, tseg,
+    )
+
+
+_FAMILY = Family(
+    stores={
+        "postings": Store(
+            "tok STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, "
+            "positions ARRAY<BIGINT>, bucket INT, segment STRING",
+            key="bucket",
+        ),
+        "terms": Store(
+            "tok STRING, df BIGINT, max_tf BIGINT, bucket INT, segment STRING",
+            key="bucket",
+        ),
+        "stats": Store("n BIGINT, sum_dl BIGINT, segment STRING"),
+    },
+    id_col="doc_id",
+    negate=_negative_partials,
 )
 
 
@@ -154,11 +171,22 @@ _MAX_BUCKETS = 4096
 
 
 def _derive_n_buckets(docs: DataFrame) -> int:
+    """Bucket count from the input's plan size estimate.  An estimate
+    at or above ``spark.sql.defaultSizeInBytes`` means UNKNOWN
+    (createDataFrame, RDD-backed and foreachBatch frames report it), not
+    huge, and falls back to N_TERM_BUCKETS."""
     try:
         size = int(
             docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
+        unknown = int(
+            docs.sparkSession._jsparkSession.sessionState()
+            .conf()
+            .defaultSizeInBytes()
+        )
     except Exception:
+        return N_TERM_BUCKETS
+    if size >= unknown:
         return N_TERM_BUCKETS
     n = _MIN_BUCKETS
     while n < _MAX_BUCKETS and n * _TARGET_BUCKET_INPUT_BYTES < size:
@@ -167,39 +195,43 @@ def _derive_n_buckets(docs: DataFrame) -> int:
 
 
 def _layout_buckets(gpath: str) -> int:
-    layout = _read_layout(gpath)
+    layout = read_layout(gpath)
     if layout is None:
         return N_TERM_BUCKETS
     return int(layout.get("n_term_buckets", N_TERM_BUCKETS))
 
 
 def _segment_buckets(
-    gpath: str, docs: DataFrame, n_buckets: int | None = None
-) -> int:
-    """Bucket count for a segment write: the generation's pinned layout
-    if one exists (appends MUST match the live partitioning), else the
-    explicit override or the size-derived count, pinned for the
-    generation."""
-    layout = _read_layout(gpath)
-    if layout is not None and "n_term_buckets" in layout:
-        return int(layout["n_term_buckets"])
-    n = n_buckets if n_buckets is not None else _derive_n_buckets(docs)
-    _write_layout(gpath, {"n_term_buckets": n})
-    return n
+    gpath: str, docs: DataFrame, write: str, n_buckets: int | None = None
+) -> tuple[int, bool]:
+    """(bucket count, whether this write pins it in LAYOUT).  A segment
+    write reuses the generation's pinned layout (appends MUST match the
+    live partitioning); a generation holding postings but no LAYOUT
+    predates layouts and was written at N_TERM_BUCKETS.  A build
+    (``TREE``) and the first write into an empty generation take the
+    explicit override or the size-derived count — a build re-pins over
+    any layout the replaced tree left behind."""
+    if write != TREE:
+        if read_layout(gpath) is not None:
+            return _layout_buckets(gpath), False
+        if os.path.isdir(f"{gpath}/postings"):
+            return N_TERM_BUCKETS, True
+    if n_buckets is None:
+        n_buckets = _derive_n_buckets(docs)
+    return n_buckets, True
 
 
 def _write_segment(
     docs: DataFrame,
-    path: str,
-    mode: str,
+    gpath: str,
+    write: str,
     segment: str,
-    dynamic: bool = False,
     n_buckets: int | None = None,
 ) -> None:
     from redis_streams_spark.functions.textfns import words
 
     spark = docs.sparkSession
-    n_buckets = _segment_buckets(path, docs, n_buckets)
+    n_buckets, pin = _segment_buckets(gpath, docs, write, n_buckets)
     base = docs.select("doc_id", words("text").alias("w"))
     dl = base.where(F.size("w") > 0).select(
         "doc_id", F.size("w").cast("long").alias("dl")
@@ -215,65 +247,40 @@ def _write_segment(
         )
         .join(dl, "doc_id")
         .withColumn("bucket", h32("tok") % n_buckets)
-        .withColumn("segment", F.lit(segment))
     )
-    # dynamic partition overwrite: an "overwrite" write replaces ONLY
-    # the partitions it produces (this segment's), never other segments
-    # — the idempotent-replay mechanism for streaming ingestion.  The
-    # initial build keeps STATIC mode so it clears the whole tree
-    # (dynamic would leave stale segments from a previous index alive).
-    owm = ("partitionOverwriteMode", "dynamic" if dynamic else "static")
-    # one shuffle keyed on the partition column so each bucket writes
-    # from one task set instead of |tasks| x |buckets| small files
-    postings.repartition("bucket").write.mode(mode).option(*owm).partitionBy(
-        "segment", "bucket"
-    ).parquet(f"{path}/postings")
+    _FAMILY.write(postings, gpath, "postings", write, segment)
+    # pinned only once the first postings write has succeeded: a failed
+    # first write must not leave a layout behind for later writes
+    if pin:
+        write_layout(gpath, {"n_term_buckets": n_buckets})
     # The terms and stats passes derive from the postings JUST WRITTEN
-    # instead of a persist of the postings lineage (r14, guide §5/§8:
-    # the written output doubles as the materialized intermediate).
-    # The old ``postings.persist()`` spilled the corpus-sized exploded
-    # frame — positions column included — through the block manager and
-    # registered the subtree in the session CacheManager; the read-back
-    # is a compressed, COLUMN-PRUNED parquet scan (neither pass touches
+    # instead of a persist of the postings lineage: the read-back is a
+    # compressed, COLUMN-PRUNED parquet scan (neither pass touches
     # ``positions``, the bulk of a positional index) of exactly this
-    # segment's partitions.  Measured at sf0.001: build 7.6 -> ~5 s and
-    # -2 scheduled jobs (OPTIMIZATION_r14.md).  Explicit schema: an
-    # EMPTY batch writes no data files and inference would fail.
-    written = (
-        spark.read.schema(_PART_SCHEMAS["postings"])
-        .parquet(f"{path}/postings")
-        .where(F.col("segment") == segment)
-    )
+    # segment's partitions.
+    written = _FAMILY.read_segment(spark, gpath, "postings", segment)
+
     # df partial + the segment's max term frequency: max_tf feeds the
     # MaxScore upper bound (an UPPER bound stays sound if loose, so
     # compaction takes max() and delete partials contribute 0)
     def _write_terms() -> None:
-        (
-            written.groupBy("tok", "segment", "bucket")
-            .agg(
+        _FAMILY.write(
+            written.groupBy("tok", "segment", "bucket").agg(
                 F.count(F.lit(1)).alias("df"),
                 F.max("tf").alias("max_tf"),
-            )
-            .repartition("bucket")
-            .write.mode(mode)
-            .option(*owm)
-            .partitionBy("segment", "bucket")
-            .parquet(f"{path}/terms")
+            ),
+            gpath, "terms", write,
         )
 
     def _write_stats() -> None:
-        (
+        _FAMILY.write(
             written.groupBy("doc_id")
             .agg(F.min("dl").alias("dl"))
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
                 F.sum("dl").cast("long").alias("sum_dl"),
-            )
-            .withColumn("segment", F.lit(segment))
-            .write.mode(mode)
-            .option(*owm)
-            .partitionBy("segment")
-            .parquet(f"{path}/stats")
+            ),
+            gpath, "stats", write, segment,
         )
 
     # the two derived writes read the same written postings and target
@@ -302,20 +309,11 @@ def build_inverted_index(
     (see ``_segment_buckets``); either way the count is pinned in the
     generation's LAYOUT file so appends and readers agree.  Returns
     the generation path actually written."""
-    if managed:
-        gen = "g00000001"
-        os.makedirs(path, exist_ok=True)
-        _write_segment(
-            docs,
-            os.path.join(path, gen),
-            "overwrite",
-            "base",
-            n_buckets=n_buckets,
-        )
-        _write_manifest(path, gen)
-        return os.path.join(path, gen)
-    _write_segment(docs, path, "overwrite", "base", n_buckets=n_buckets)
-    return path
+    return build_generation(
+        path,
+        managed,
+        lambda gpath: _write_segment(docs, gpath, TREE, "base", n_buckets),
+    )
 
 
 def update_inverted_index(
@@ -331,10 +329,9 @@ def update_inverted_index(
 
     ``segment`` names the batch's partition.  Pass a DETERMINISTIC name
     (e.g. the foreachBatch ``batchId``) for replay-safe streaming
-    ingestion: the write uses dynamic partition overwrite, so a
-    re-delivered micro-batch REPLACES its own segment instead of
-    double-counting it (Spark's foreachBatch is at-least-once — r10
-    review finding).  With ``segment=None`` a plain append is performed
+    ingestion: a re-delivered micro-batch REPLACES its own segment
+    instead of double-counting it (Spark's foreachBatch is
+    at-least-once).  With ``segment=None`` a plain append is performed
     under an opaque unique name, which is only safe for exactly-once
     callers.
 
@@ -343,167 +340,18 @@ def update_inverted_index(
     the batch lands as its own segment — the dedup-refresh pipeline's
     re-ingest of changed documents, which the plain caller contract
     (one segment per doc_id) forbids.  Replay-safe for deterministic
-    segments: the delete pass ignores this batch's own prior
-    tombstones and its own postings segment, so a re-run recomputes
-    the same corrections and dynamic-overwrite replaces them."""
-    from redis_streams_spark.operators.segstore import (
-        check_segment_name,
-        clear_segment_partitions,
+    segments (see ``segstore.Family.ingest``)."""
+    _FAMILY.ingest(
+        docs_new,
+        path,
+        segment,
+        "update_inverted_index",
+        lambda gpath, seg, write: _write_segment(docs_new, gpath, write, seg),
+        replace=replace,
     )
-
-    spark = docs_new.sparkSession
-    gpath, dead = _open_index(path)
-    seg = segment if segment is not None else uuid.uuid4().hex[:12]
-    check_segment_name(seg, "update_inverted_index")
-    if seg in dead or f"{seg}.del" in dead:
-        raise ValueError(
-            f"update_inverted_index: segment {seg!r} is dead in the "
-            "MANIFEST (dropped or merged away) — its partitions are "
-            "invisible to readers; pick a fresh segment name"
-        )
-    if replace:
-        _apply_delete(
-            spark,
-            gpath,
-            docs_new.select("doc_id").distinct(),
-            tseg=f"{seg}.del",
-            exclude_segment=seg,
-            dead=dead,
-        )
-    if segment is not None:
-        # a named segment may be a replay OR a re-ingest of CHANGED
-        # content; clear its old partitions first so stale (segment,
-        # bucket) pairs the new batch does not rewrite cannot linger
-        # (r11 advice — see segstore.clear_segment_partitions)
-        clear_segment_partitions(gpath, ("postings", "terms", "stats"), seg)
-        _write_segment(docs_new, gpath, "overwrite", seg, dynamic=True)
-    else:
-        _write_segment(docs_new, gpath, "append", seg)
 
 
 # ----------------------------------------------------------------- delete
-
-
-from redis_streams_spark.operators.segstore import (  # noqa: E402
-    read_optional as _read_optional,
-)
-
-
-# canonical component schemas — the empty-index fallback (a fully
-# deleted / fully dropped corpus must answer EMPTY, not crash on an
-# unreadable parquet dir)
-_PART_SCHEMAS = {
-    "postings": (
-        "tok STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, "
-        "positions ARRAY<BIGINT>, bucket INT, segment STRING"
-    ),
-    "terms": "tok STRING, df BIGINT, max_tf BIGINT, bucket INT, segment STRING",
-    "stats": "n BIGINT, sum_dl BIGINT, segment STRING",
-}
-
-
-def _read_part(spark: SparkSession, gpath: str, sub: str) -> DataFrame:
-    df = _read_optional(spark, f"{gpath}/{sub}")
-    if df is None:
-        return spark.createDataFrame([], _PART_SCHEMAS[sub])
-    return df
-
-
-def _tombstones(spark: SparkSession, gpath: str) -> DataFrame | None:
-    t = _read_optional(spark, f"{gpath}/tombstones")
-    return None if t is None else t.select("doc_id", "segment")
-
-
-def _live_postings(postings: DataFrame, tomb: DataFrame | None) -> DataFrame:
-    """Drop tombstoned rows.  The tombstone frame is deletion-churn
-    sized (and compaction periodically empties it), so the anti-join
-    broadcasts; postings never move."""
-    if tomb is None:
-        return postings
-    return postings.join(
-        F.broadcast(tomb), ["doc_id", "segment"], "left_anti"
-    )
-
-
-def _apply_delete(
-    spark: SparkSession,
-    gpath: str,
-    ids: DataFrame,
-    tseg: str,
-    exclude_segment: str | None = None,
-    dead: list[str] = (),
-) -> None:
-    """Tombstone the LIVE postings of ``ids`` as delete batch ``tseg``:
-
-    - ``tombstones/tseg=…`` rows (doc_id, segment) naming the exact
-      postings rows now dead — the query path's anti-join key;
-    - NEGATIVE df partials into ``terms/`` and a negative (n, sum_dl)
-      partial into ``stats/`` under the same ``tseg``, so the existing
-      read-time partial sums net out the dead docs unchanged.
-
-    Liveness is computed against the CURRENT index state minus this
-    batch's own prior output (``tseg`` tombstones, ``exclude_segment``
-    postings), which is what makes a replay recompute — and dynamic-
-    overwrite replace — identical corrections instead of compounding
-    them.  Cost: one postings scan per delete batch (Lucene pays the
-    same to apply deletes); query cost is unchanged."""
-    postings = _read_optional(spark, f"{gpath}/postings")
-    if postings is None:
-        return  # empty index (first replace-mode batch): nothing to kill
-    postings = _drop_dead(postings, list(dead))
-    if exclude_segment is not None:
-        postings = postings.where(F.col("segment") != exclude_segment)
-    prev = _read_optional(spark, f"{gpath}/tombstones")
-    if prev is not None:
-        prev = prev.where(F.col("tseg") != tseg).select("doc_id", "segment")
-    live = _live_postings(
-        postings.join(ids.hint("broadcast"), "doc_id", "semi"), prev
-    ).persist()
-    owm = ("partitionOverwriteMode", "dynamic")
-    try:
-        (
-            live.select("doc_id", "segment")
-            .distinct()
-            .withColumn("tseg", F.lit(tseg))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option(*owm)
-            .partitionBy("tseg")
-            .parquet(f"{gpath}/tombstones")
-        )
-        (
-            live.groupBy("tok", "bucket")
-            .agg(
-                (-F.count(F.lit(1))).alias("df"),
-                # a dead doc may have held the segment max: 0 keeps the
-                # merged max_tf an upper bound (loose but sound)
-                F.lit(0).cast("long").alias("max_tf"),
-            )
-            .withColumn("segment", F.lit(tseg))
-            .repartition("bucket")
-            .write.mode("overwrite")
-            .option(*owm)
-            .partitionBy("segment", "bucket")
-            .parquet(f"{gpath}/terms")
-        )
-        (
-            live.groupBy("doc_id")
-            .agg(F.min("dl").alias("dl"))
-            .agg(
-                (-F.count(F.lit(1))).cast("long").alias("n"),
-                (-F.coalesce(F.sum("dl"), F.lit(0)))
-                .cast("long")
-                .alias("sum_dl"),
-            )
-            .where(F.col("n") < 0)  # no live rows -> write nothing
-            .withColumn("segment", F.lit(tseg))
-            .write.mode("overwrite")
-            .option(*owm)
-            .partitionBy("segment")
-            .parquet(f"{gpath}/stats")
-        )
-    finally:
-        live.unpersist()
 
 
 def delete_from_inverted_index(
@@ -516,21 +364,12 @@ def delete_from_inverted_index(
 
     ``delete_ids`` is a list of doc_ids or a DataFrame with a
     ``doc_id`` column.  ``segment`` names the delete batch — pass a
-    deterministic name for replay-safe streaming deletes (same
-    dynamic-overwrite idempotency as ``update_inverted_index``).
-    Queries over the index immediately exclude the dead documents AND
-    their df/avgdl contributions (negative partials), value-identical
-    to a from-scratch rebuild over the surviving corpus (tested);
+    deterministic name for replay-safe streaming deletes.  Queries over
+    the index immediately exclude the dead documents AND their
+    df/avgdl contributions (negative partials), value-identical to a
+    from-scratch rebuild over the surviving corpus (tested);
     ``compact_inverted_index`` later drops the dead rows physically."""
-    gpath, dead = _open_index(path)
-    if isinstance(delete_ids, DataFrame):
-        ids = delete_ids.select("doc_id").distinct()
-    else:
-        ids = spark.createDataFrame(
-            [(int(i),) for i in delete_ids], "doc_id BIGINT"
-        )
-    tseg = segment if segment is not None else "del-" + uuid.uuid4().hex[:12]
-    _apply_delete(spark, gpath, ids, tseg=tseg, dead=dead)
+    _FAMILY.delete(spark, path, delete_ids, segment)
 
 
 # ---------------------------------------------------------------- compact
@@ -547,95 +386,40 @@ def compact_inverted_index(
     and no tombstones carried over.  Query results are value-identical
     before and after (tested).
 
-    Two modes:
+    ``dst`` given: compact the index at ``src`` (root or generation)
+    into the explicit ``dst`` tree — the caller owns the swap.
+    ``dst=None`` (managed root): compact into the next generation and
+    flip ``MANIFEST`` last — the atomic swap (compact-while-querying is
+    tested).  Returns the directory the compacted index was written
+    to."""
 
-    - ``dst`` given: compact the index at ``src`` (root or generation)
-      into the explicit ``dst`` tree — the caller owns the swap.
-    - ``dst=None`` (managed root): compact the CURRENT generation into
-      the next ``gNNNNNNNN`` sibling and flip ``MANIFEST`` last — the
-      atomic swap.  Readers that captured a DataFrame before the flip
-      keep reading the old generation's intact files; new calls
-      resolve the new one (compact-while-querying is tested).  Old
-      generations are left for the caller to garbage-collect once
-      their readers drain.
-
-    Returns the directory the compacted index was written to."""
-    gsrc, dead = _open_index(src)
-    if dst is None:
-        if not os.path.isfile(os.path.join(src, _MANIFEST)):
-            raise ValueError(
-                f"compact_inverted_index: {src!r} is not a managed index "
-                "root (no MANIFEST) — pass an explicit dst instead"
-            )
-        gen = _next_generation(src)
-        gdst = os.path.join(src, gen)
-    else:
-        gdst = dst
-    tomb = _tombstones(spark, gsrc)
-    # compaction carries bucket VALUES through unchanged, so the new
-    # generation must pin the same bucket count for readers and for any
-    # later ingest into it
-    src_layout = _read_layout(gsrc)
-    if src_layout is not None:
-        _write_layout(gdst, src_layout)
-    postings = _live_postings(
-        _drop_dead(_read_part(spark, gsrc, "postings"), dead), tomb
-    ).withColumn("segment", F.lit("base"))
-    postings.repartition("bucket").write.mode("overwrite").partitionBy(
-        "segment", "bucket"
-    ).parquet(f"{gdst}/postings")
-    (
-        _drop_dead(_read_part(spark, gsrc, "terms"), dead)
-        .groupBy("tok", "bucket")
-        .agg(F.sum("df").alias("df"), F.max("max_tf").alias("max_tf"))
-        .where(F.col("df") > 0)
-        .withColumn("segment", F.lit("base"))
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("segment", "bucket")
-        .parquet(f"{gdst}/terms")
-    )
-    (
-        _stats_totals(spark, gsrc, dead)
-        .select("n", F.col("sdl").cast("long").alias("sum_dl"))
-        .withColumn("segment", F.lit("base"))
-        .write.mode("overwrite")
-        .partitionBy("segment")
-        .parquet(f"{gdst}/stats")
-    )
-    if dst is None:
-        _write_manifest(src, gen)
-    return gdst
-
-
-def _require_managed(path: str, op: str) -> dict:
-    from redis_streams_spark.operators.segstore import require_managed
-
-    return require_managed(path, op)
-
-
-def _check_untangled(
-    spark: SparkSession, gpath: str, segments: list[str], op: str
-) -> None:
-    """Refuse segment-level ops on segments entangled with tombstones:
-    a segment TARGETED by tombstones has negative df/stats corrections
-    living in OTHER partitions (dropping it would double-subtract),
-    and a delete batch's own partitions carry corrections for postings
-    that live elsewhere (dropping it would resurrect them).  Either
-    case needs ``compact_inverted_index`` (which nets everything out)
-    instead of the O(1) manifest flip."""
-    tomb = _read_optional(spark, f"{gpath}/tombstones")
-    if tomb is None:
-        return
-    hit = tomb.where(
-        F.col("tseg").isin(segments) | F.col("segment").isin(segments)
-    ).limit(1).count()
-    if hit:
-        raise ValueError(
-            f"{op}: segment(s) {segments} are entangled with tombstones "
-            "(targeted by, or themselves, a delete batch) — run "
-            "compact_inverted_index instead"
+    def write(gsrc: str, dead: list[str], out: str) -> None:
+        tomb = _FAMILY.tombstones(spark, gsrc)
+        # compaction carries bucket VALUES through unchanged, so the new
+        # generation must pin the same bucket count for readers and for
+        # any later ingest into it
+        src_layout = read_layout(gsrc)
+        if src_layout is not None:
+            write_layout(out, src_layout)
+        postings = _FAMILY.live(
+            drop_dead(_FAMILY.read(spark, gsrc, "postings"), dead), tomb
         )
+        _FAMILY.write(postings, out, "postings", TREE, "base")
+        _FAMILY.write(
+            drop_dead(_FAMILY.read(spark, gsrc, "terms"), dead)
+            .groupBy("tok", "bucket")
+            .agg(F.sum("df").alias("df"), F.max("max_tf").alias("max_tf"))
+            .where(F.col("df") > 0),
+            out, "terms", TREE, "base",
+        )
+        _FAMILY.write(
+            _stats_totals(spark, gsrc, dead).select(
+                "n", F.col("sdl").cast("long").alias("sum_dl")
+            ),
+            out, "stats", TREE, "base",
+        )
+
+    return compact_generation(src, dst, "compact_inverted_index", write)
 
 
 def drop_segment(spark: SparkSession, path: str, segment: str) -> None:
@@ -649,16 +433,16 @@ def drop_segment(spark: SparkSession, path: str, segment: str) -> None:
     batches (tested).  A time-partitioned corpus drops its oldest
     batch this way for the price of a metadata write.
 
-    Refused for tombstone-entangled segments (see _check_untangled);
-    physical reclamation happens at ``gc_index`` or the next full
-    compaction."""
-    man = _require_managed(path, "drop_segment")
-    gpath = os.path.join(path, man["generation"])
-    if segment in man["dead"]:
-        return  # idempotent
-    _check_untangled(spark, gpath, [segment], "drop_segment")
-    _write_manifest(
-        path, man["generation"], man["dead"] + [segment], man["pending"]
+    Refused for tombstone-entangled segments (see
+    ``segstore.require_untangled``); physical reclamation happens at
+    ``gc_index`` or the next full compaction."""
+    drop_segment_metadata(
+        path,
+        segment,
+        "drop_segment",
+        lambda gpath: require_untangled(
+            spark, gpath, [segment], "drop_segment", "compact_inverted_index"
+        ),
     )
 
 
@@ -683,7 +467,7 @@ def merge_segments(
 
     Inputs must be live and tombstone-untangled (else use the full
     ``compact_inverted_index``).  Returns the merged segment name."""
-    man = _require_managed(path, "merge_segments")
+    man = require_managed(path, "merge_segments")
     gpath = os.path.join(path, man["generation"])
     segments = sorted(set(segments))
     if len(segments) < 2:
@@ -698,54 +482,37 @@ def merge_segments(
         return merged  # already committed: idempotent replay
     if gone:
         raise ValueError(f"merge_segments: {sorted(gone)} not live")
-    _check_untangled(spark, gpath, segments, "merge_segments")
-    from redis_streams_spark.operators.segstore import (
-        acquire_merge_lock,
-        release_merge_lock,
+    require_untangled(
+        spark, gpath, segments, "merge_segments", "compact_inverted_index"
     )
-
     # the lock brackets the stage→commit window so a concurrent/cron
-    # gc cannot bulldoze the staged pending segment (r11 advice); a
-    # crash inside the window leaves the lock for gc(force=True)
+    # gc cannot bulldoze the staged pending segment; a crash inside the
+    # window leaves the lock for gc(force=True)
     acquire_merge_lock(path, "merge_segments")
-    _write_manifest(
+    write_manifest(
         path, man["generation"], man["dead"], man["pending"] + [merged]
     )
-    owm = ("partitionOverwriteMode", "dynamic")
-    postings = (
-        spark.read.parquet(f"{gpath}/postings")
-        .where(F.col("segment").isin(segments))
-        .withColumn("segment", F.lit(merged))
-    )
-    postings.repartition("bucket").write.mode("overwrite").option(
-        *owm
-    ).partitionBy("segment", "bucket").parquet(f"{gpath}/postings")
-    (
-        spark.read.parquet(f"{gpath}/terms")
-        .where(F.col("segment").isin(segments))
+
+    def inputs(store: str) -> DataFrame:
+        return spark.read.parquet(f"{gpath}/{store}").where(
+            F.col("segment").isin(segments)
+        )
+
+    _FAMILY.write(inputs("postings"), gpath, "postings", SEGMENT, merged)
+    _FAMILY.write(
+        inputs("terms")
         .groupBy("tok", "bucket")
-        .agg(F.sum("df").alias("df"), F.max("max_tf").alias("max_tf"))
-        .withColumn("segment", F.lit(merged))
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .option(*owm)
-        .partitionBy("segment", "bucket")
-        .parquet(f"{gpath}/terms")
+        .agg(F.sum("df").alias("df"), F.max("max_tf").alias("max_tf")),
+        gpath, "terms", SEGMENT, merged,
     )
-    (
-        spark.read.parquet(f"{gpath}/stats")
-        .where(F.col("segment").isin(segments))
-        .agg(
+    _FAMILY.write(
+        inputs("stats").agg(
             F.sum("n").cast("long").alias("n"),
             F.sum("sum_dl").cast("long").alias("sum_dl"),
-        )
-        .withColumn("segment", F.lit(merged))
-        .write.mode("overwrite")
-        .option(*owm)
-        .partitionBy("segment")
-        .parquet(f"{gpath}/stats")
+        ),
+        gpath, "stats", SEGMENT, merged,
     )
-    _write_manifest(path, man["generation"], man["dead"] + segments, [])
+    write_manifest(path, man["generation"], man["dead"] + segments, [])
     release_merge_lock(path)
     return merged
 
@@ -759,9 +526,7 @@ def gc_index(path: str, force: bool = False) -> list[str]:
     while a merge holds the in-flight marker unless ``force=True``
     (see segstore.gc_generations).  Returns the removed paths and
     commits a clean manifest."""
-    from redis_streams_spark.operators.segstore import gc_generations
-
-    return gc_generations(path, ("postings", "terms", "stats"), force=force)
+    return gc_generations(path, tuple(_FAMILY.stores), force=force)
 
 
 def index_status(spark: SparkSession, path: str) -> DataFrame:
@@ -777,15 +542,15 @@ def index_status(spark: SparkSession, path: str) -> DataFrame:
 
     built from the stats partials, the tombstone partitions, and the
     manifest — all metadata-sized reads, never the postings."""
-    gpath, _ = _open_index(path)
-    man = _read_manifest(path)
+    gpath, _ = open_index(path)
+    man = read_manifest(path)
     dead = set(man["dead"]) if man else set()
     pending = set(man["pending"]) if man else set()
-    stats = _read_part(spark, gpath, "stats").groupBy("segment").agg(
+    stats = _FAMILY.read(spark, gpath, "stats").groupBy("segment").agg(
         F.sum("n").cast("long").alias("n_docs"),
         F.sum("sum_dl").cast("long").alias("sum_dl"),
     )
-    tomb = _read_optional(spark, f"{gpath}/tombstones")
+    tomb = read_optional(spark, f"{gpath}/tombstones")
     if tomb is not None:
         per_target = tomb.groupBy(F.col("segment").alias("t_seg")).agg(
             F.count(F.lit(1)).cast("long").alias("dead_docs")
@@ -864,14 +629,14 @@ def _query_frames(
     (postings, term-partials, stats) for a query's term set — the
     shared read path."""
     buckets = sorted({h32_py(t) % _layout_buckets(gpath) for t in terms})
-    tomb = _tombstones(spark, gpath)
-    postings = _live_postings(
-        _drop_dead(
-            _read_part(spark, gpath, "postings"), dead
+    tomb = _FAMILY.tombstones(spark, gpath)
+    postings = _FAMILY.live(
+        drop_dead(
+            _FAMILY.read(spark, gpath, "postings"), dead
         ).where(F.col("bucket").isin(buckets)),
         tomb,
     )
-    tpart = _drop_dead(_read_part(spark, gpath, "terms"), dead).where(
+    tpart = drop_dead(_FAMILY.read(spark, gpath, "terms"), dead).where(
         F.col("bucket").isin(buckets)
     )
     stats = _stats_totals(spark, gpath, dead).select(
@@ -885,7 +650,7 @@ def _stats_totals(
 ) -> DataFrame:
     """One-row (n, sdl) corpus totals over the live stats partials."""
     return (
-        _drop_dead(_read_part(spark, gpath, "stats"), dead)
+        drop_dead(_FAMILY.read(spark, gpath, "stats"), dead)
         .agg(F.sum("n").cast("long").alias("n"), F.sum("sum_dl").alias("sdl"))
     )
 
@@ -944,13 +709,16 @@ def _meta_frames(
     the live matched frame has no rows for it and the inner join drops
     nothing either way); ``stats`` applies the same ``sdl*1.0/n``
     Spark expression as ``_stats_totals`` consumers, so the avgdl
-    double is bit-identical to the frame path."""
+    double is bit-identical to the frame path.  An empty corpus total
+    (no query term in the index, or every document deleted) goes in as
+    a NULL ``n``: nothing is matched then, and a literal 0 would make
+    the folded division raise DIVIDE_BY_ZERO under ANSI mode."""
     dfreq = spark.createDataFrame(
         [(t, int(d)) for t, (d, _m) in sorted(meta.items())],
         "df_tok STRING, df BIGINT",
     )
     stats = spark.createDataFrame(
-        [(int(n_docs), int(sdl))], "n BIGINT, sdl BIGINT"
+        [(int(n_docs) or None, int(sdl))], "n BIGINT, sdl BIGINT"
     ).select("n", (F.col("sdl") * 1.0 / F.col("n")).alias("avgdl"))
     return dfreq, stats
 
@@ -994,7 +762,7 @@ def bm25_topk_indexed(
     ``_meta`` (the router's collected ``_term_meta``) the df/stats
     side frames are re-emitted as LocalRelations instead of
     re-aggregated from the store (see ``_meta_frames``)."""
-    gpath, dead = _open_index(path)
+    gpath, dead = open_index(path)
     pairs = [(qid, t) for qid, terms in queries.items() for t in terms]
     qterms = F.broadcast(
         spark.createDataFrame(pairs, "query_id INT, term STRING")
@@ -1066,7 +834,7 @@ def bm25_topk_maxscore(
     With ``return_plan=True`` returns ``(df, plan)`` where plan maps
     query_id → {theta, essential, skipped} for tests and SCALE
     accounting."""
-    gpath, dead = _open_index(path)
+    gpath, dead = open_index(path)
     all_terms = {t for terms in queries.values() for t in terms}
     postings, tpart, _ = _query_frames(spark, gpath, all_terms, dead)
     # the MaxScore plan makes THREE passes over the bucket-pruned
@@ -1234,7 +1002,7 @@ def bm25_topk_auto(
     {route, matched, essential, skippable} for tests/accounting."""
     import math
 
-    gpath, dead = _open_index(path)
+    gpath, dead = open_index(path)
     all_terms = {t for terms in queries.values() for t in terms}
     _, tpart, _ = _query_frames(spark, gpath, all_terms, dead)
     meta, n_docs, avgdl, sdl = _term_meta(
@@ -1315,7 +1083,7 @@ def phrase_match_indexed(
     slot intersects its own shifted copy of the shared posting row.
     Returns (phrase_id, doc_id, n_occurrences), the same frame as the
     from-scratch ``text_phrase_ngram``."""
-    gpath, dead = _open_index(path)
+    gpath, dead = open_index(path)
     rows = [
         (pid, i, t, len(terms))
         for pid, terms in phrases.items()

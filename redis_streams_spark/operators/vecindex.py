@@ -67,13 +67,10 @@ Layout under ``path`` (managed roots add generations + MANIFEST):
 - ``tombstones/`` — (vec_id, segment) partitioned by ``tseg``: row
   deletion, applied as a broadcast anti-join on the cell scan.
 
-Same writer discipline as the siblings: one batch = one segment,
-deterministic names make writes replay-safe dynamic partition
-overwrites, ``replace=True`` tombstones live copies first, compaction
-rewrites into the next generation and flips the MANIFEST last, and
-``drop_vector_segment`` refuses tombstone-entangled segments (their
-negative partials live in other partitions — dropping either side
-would skew the centroids) and routes the caller to compaction.
+The segment lifecycle — replay-safe named segments, ``replace=True``
+upserts, tombstones, compaction into the next generation, refusal to
+drop tombstone-entangled segments — is ``operators/segstore.py``'s;
+this module declares the two stores and the centroid partials.
 
 Reference basis: none (SURVEY §2.2 extension surface — similarity
 search); the lifecycle mirrors Lucene commit points, the partial-merge
@@ -85,7 +82,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -94,15 +90,20 @@ from pyspark.sql import functions as F
 from redis_streams_spark.functions.rounding import rnd
 from redis_streams_spark.operators.similarity import as_double_vec, cosine, dot
 from redis_streams_spark.operators.segstore import (
+    SEGMENT,
+    TREE,
+    Family,
+    Store,
+    build_generation,
+    compact_generation,
     drop_dead,
     drop_segment_metadata,
     gc_generations,
-    next_generation,
     open_index,
+    persist_verdicts,
     read_manifest,
-    read_optional as _read_optional,
-    require_managed,
-    write_manifest,
+    read_optional,
+    require_untangled,
 )
 
 __all__ = [
@@ -119,18 +120,6 @@ __all__ = [
     "vector_index_status",
     "vector_index_maintenance_advice",
 ]
-
-_STORES = ("cells", "cstats")
-
-_SCHEMAS = {
-    "cells": (
-        "vec_id BIGINT, v ARRAY<DOUBLE>, norm DOUBLE, "
-        "label INT, segment STRING"
-    ),
-    "cstats": (
-        "label INT, cnt BIGINT, csum ARRAY<DOUBLE>, segment STRING"
-    ),
-}
 
 _META_FILE = "INDEXMETA"
 
@@ -373,7 +362,7 @@ def _np_assign_scores(e: DataFrame, codebook: DataFrame) -> DataFrame:
 
 
 def _read_codebook(spark: SparkSession, gpath: str) -> DataFrame:
-    cb = _read_optional(spark, f"{gpath}/codebook")
+    cb = read_optional(spark, f"{gpath}/codebook")
     if cb is None:
         raise ValueError(
             f"vector index at {gpath} declares quantizer=kmeans but has "
@@ -397,7 +386,7 @@ def _with_cells(emb: DataFrame, codebook: DataFrame) -> DataFrame:
 
 
 def _read_pqbook(spark: SparkSession, gpath: str) -> DataFrame:
-    pb = _read_optional(spark, f"{gpath}/pqbook")
+    pb = read_optional(spark, f"{gpath}/pqbook")
     if pb is None:
         raise ValueError(
             f"vector index at {gpath} declares PQ but has no pqbook/ "
@@ -432,26 +421,13 @@ def _with_codes(emb: DataFrame, pqbook: DataFrame, m: int) -> DataFrame:
     return emb.join(codes, "vec_id")
 
 
-def _read_store(spark: SparkSession, gpath: str, sub: str) -> DataFrame:
-    df = _read_optional(spark, f"{gpath}/{sub}")
-    if df is None:
-        return spark.createDataFrame([], _SCHEMAS[sub])
-    return df
-
-
-def _tombstones(spark: SparkSession, gpath: str) -> DataFrame | None:
-    t = _read_optional(spark, f"{gpath}/tombstones")
-    return None if t is None else t.select("vec_id", "segment")
-
-
 def _live_cells(
     spark: SparkSession, gpath: str, dead: list[str]
 ) -> DataFrame:
-    cells = drop_dead(_read_store(spark, gpath, "cells"), dead)
-    tomb = _tombstones(spark, gpath)
-    if tomb is None:
-        return cells
-    return cells.join(F.broadcast(tomb), ["vec_id", "segment"], "left_anti")
+    return _FAMILY.live(
+        drop_dead(_FAMILY.read(spark, gpath, "cells"), dead),
+        _FAMILY.tombstones(spark, gpath),
+    )
 
 
 def _cstat_partials(e: DataFrame, segment: str, negate: bool = False) -> DataFrame:
@@ -504,54 +480,54 @@ def _merged_centroids(cstats: DataFrame) -> DataFrame:
     return cent.withColumn("cnorm", F.sqrt(dot(F.col("cv"), F.col("cv"))))
 
 
+def _negative_partials(live: DataFrame, gpath: str, tseg: str) -> None:
+    """A delete batch's NEGATIVE centroid partials under ``tseg``: the
+    merged centroids lose the dead vectors."""
+    _FAMILY.write(
+        _cstat_partials(live, tseg, negate=True), gpath, "cstats", SEGMENT
+    )
+
+
+_FAMILY = Family(
+    stores={
+        "cells": Store(
+            "vec_id BIGINT, v ARRAY<DOUBLE>, norm DOUBLE, "
+            "label INT, segment STRING",
+            key="label",
+        ),
+        "cstats": Store(
+            "label INT, cnt BIGINT, csum ARRAY<DOUBLE>, segment STRING",
+            one_file=True,
+        ),
+    },
+    id_col="vec_id",
+    negate=_negative_partials,
+)
+
+
 # ------------------------------------------------------------------ build
 
 
 def _write_segment(
-    emb: DataFrame,
-    gpath: str,
-    mode: str,
-    segment: str,
-    dynamic: bool = False,
+    emb: DataFrame, gpath: str, write: str, segment: str
 ) -> None:
-    owm = ("partitionOverwriteMode", "dynamic" if dynamic else "static")
     cols = ["vec_id", "label", "v", "norm"] + (
         ["codes"] if "codes" in emb.columns else []
     )
     e = as_double_vec(emb).select(*cols)
-    (
-        e.withColumn("segment", F.lit(segment))
-        .repartition("label")
-        .write.mode(mode)
-        .option(*owm)
-        .partitionBy("segment", "label")
-        .parquet(f"{gpath}/cells")
-    )
+    _FAMILY.write(e, gpath, "cells", write, segment)
     # centroid partials derive from the cells JUST WRITTEN instead of a
     # persist of the assignment lineage (r14, guide §5/§8 — the same
     # written-output-as-intermediate shape as the inverted index): the
     # expensive cell-assignment kernel has exactly one consumer (the
     # cells write), the read-back scans only (label, v) of this
     # segment's partitions, and nothing registers in the session
-    # CacheManager.  Explicit schema: an empty batch writes no data
-    # files and inference would fail.  Summation inputs are identical,
-    # so the associative csum partials are bit-equal to the persisted
-    # form.
-    spark = emb.sparkSession
-    written = (
-        spark.read.schema(_SCHEMAS["cells"])
-        .parquet(f"{gpath}/cells")
-        .where(F.col("segment") == segment)
-        .select("label", "v")
-    )
-    (
-        _cstat_partials(written, segment)
-        .coalesce(1)
-        .write.mode(mode)
-        .option(*owm)
-        .partitionBy("segment")
-        .parquet(f"{gpath}/cstats")
-    )
+    # CacheManager.  Summation inputs are identical, so the associative
+    # csum partials are bit-equal to the persisted form.
+    written = _FAMILY.read_segment(
+        emb.sparkSession, gpath, "cells", segment
+    ).select("label", "v")
+    _FAMILY.write(_cstat_partials(written, segment), gpath, "cstats", write)
 
 
 def build_vector_index(
@@ -604,8 +580,6 @@ def build_vector_index(
     ``pq_train_codebooks`` would return — injecting anything else
     produces an index whose stored quantizer disagrees with its pinned
     assignments."""
-    os.makedirs(path, exist_ok=True)
-    gpath = os.path.join(path, "g00000001") if managed else path
     meta: dict = {"quantizer": "label"}
     if pq_m is None:
         pqbook = None
@@ -640,15 +614,24 @@ def build_vector_index(
         out = emb
     if pqbook is not None:
         out = _with_codes(out, pqbook, pq_m)
-    _write_index_meta(path, meta)
-    _write_segment(out, gpath, "overwrite", "base")
+
+    def write(gpath: str) -> None:
+        _write_index_meta(path, meta)
+        _write_segment(out, gpath, TREE, "base")
+        _write_quantizers(gpath, cb, pqbook)
+
+    return build_generation(path, managed, write)
+
+
+def _write_quantizers(
+    gpath: str, cb: DataFrame | None, pqbook: DataFrame | None
+) -> None:
+    """The frozen quantizer stores of a generation (kmeans codebook, PQ
+    codebooks), flipped atomically with the cells they quantized."""
     if cb is not None:
         cb.write.mode("overwrite").parquet(f"{gpath}/codebook")
     if pqbook is not None:
         pqbook.write.mode("overwrite").parquet(f"{gpath}/pqbook")
-    if managed:
-        write_manifest(path, "g00000001")
-    return gpath
 
 
 def update_vector_index(
@@ -667,107 +650,29 @@ def update_vector_index(
     copies of this batch's vec_ids in other segments first (negative
     centroid partials under ``<segment>.del``), the upsert path for
     re-embedded documents."""
-    from redis_streams_spark.operators.segstore import (
-        check_segment_name,
-        clear_segment_partitions,
-    )
 
-    spark = emb_new.sparkSession
-    gpath, dead = open_index(path)
-    seg = segment if segment is not None else uuid.uuid4().hex[:12]
-    # reserved namespace: an ingest segment named '*.del'/'del-*' would
-    # be misclassified as a delete batch by _tombstone_entangled and
-    # become permanently undroppable (r11 advice)
-    check_segment_name(seg, "update_vector_index")
-    if seg in dead or f"{seg}.del" in dead:
-        raise ValueError(
-            f"update_vector_index: segment {seg!r} is dead in the "
-            "MANIFEST — pick a fresh segment name"
-        )
-    if replace:
-        _apply_delete(
-            spark,
-            gpath,
-            emb_new.select("vec_id").distinct(),
-            tseg=f"{seg}.del",
-            exclude_segment=seg,
-            dead=dead,
-        )
-    meta = _read_index_meta(path)
-    if meta["quantizer"] == "kmeans":
-        # pin the batch's cells against the live generation's FROZEN
-        # codebook (a broadcast-sized read) — appends never shift
-        # existing assignments, so the centroid-partial merge stays a
-        # rebuild-exact account of the pinned cells
-        emb_new = _with_cells(emb_new, _read_codebook(spark, gpath))
-    if meta.get("pq_m") is not None:
-        # same pin for the PQ codes: the frozen per-generation pqbook
-        emb_new = _with_codes(
-            emb_new, _read_pqbook(spark, gpath), meta["pq_m"]
-        )
-    if segment is not None:
-        # a named segment may be a replay OR a re-ingest of CHANGED
-        # content; stale label cells the new batch does not rewrite
-        # would linger (and diverge from the fully-replaced cstats
-        # partial, skewing centroids) — clear them first (r11 advice)
-        clear_segment_partitions(gpath, _STORES, seg)
-        _write_segment(emb_new, gpath, "overwrite", seg, dynamic=True)
-    else:
-        _write_segment(emb_new, gpath, "append", seg)
+    def write_batch(gpath: str, seg: str, write: str) -> None:
+        spark = emb_new.sparkSession
+        meta = _read_index_meta(path)
+        emb = emb_new
+        if meta["quantizer"] == "kmeans":
+            # pin the batch's cells against the live generation's FROZEN
+            # codebook (a broadcast-sized read) — appends never shift
+            # existing assignments, so the centroid-partial merge stays
+            # a rebuild-exact account of the pinned cells
+            emb = _with_cells(emb, _read_codebook(spark, gpath))
+        if meta.get("pq_m") is not None:
+            # same pin for the PQ codes: the frozen per-generation pqbook
+            emb = _with_codes(emb, _read_pqbook(spark, gpath), meta["pq_m"])
+        _write_segment(emb, gpath, write, seg)
+
+    _FAMILY.ingest(
+        emb_new, path, segment, "update_vector_index", write_batch,
+        replace=replace,
+    )
 
 
 # ----------------------------------------------------------------- delete
-
-
-def _apply_delete(
-    spark: SparkSession,
-    gpath: str,
-    ids: DataFrame,
-    tseg: str,
-    exclude_segment: str | None = None,
-    dead: list[str] = (),
-) -> None:
-    """Tombstone the live copies of ``ids`` as delete batch ``tseg``:
-    (vec_id, segment) rows for the cell anti-join plus NEGATIVE
-    centroid partials so the merged centroids lose the dead vectors.
-    Liveness is recomputed against current state minus this batch's
-    own prior output — replay-safe (identical corrections, dynamic-
-    overwrite replaced)."""
-    cells = _read_optional(spark, f"{gpath}/cells")
-    if cells is None:
-        return
-    cells = drop_dead(cells, list(dead))
-    if exclude_segment is not None:
-        cells = cells.where(F.col("segment") != exclude_segment)
-    prev = _read_optional(spark, f"{gpath}/tombstones")
-    if prev is not None:
-        prev = prev.where(F.col("tseg") != tseg).select("vec_id", "segment")
-    live = cells.join(ids.hint("broadcast"), "vec_id", "semi")
-    if prev is not None:
-        live = live.join(F.broadcast(prev), ["vec_id", "segment"], "left_anti")
-    live = live.persist()
-    owm = ("partitionOverwriteMode", "dynamic")
-    try:
-        (
-            live.select("vec_id", "segment")
-            .distinct()
-            .withColumn("tseg", F.lit(tseg))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option(*owm)
-            .partitionBy("tseg")
-            .parquet(f"{gpath}/tombstones")
-        )
-        (
-            _cstat_partials(live, tseg, negate=True)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option(*owm)
-            .partitionBy("segment")
-            .parquet(f"{gpath}/cstats")
-        )
-    finally:
-        live.unpersist()
 
 
 def delete_from_vector_index(
@@ -779,15 +684,7 @@ def delete_from_vector_index(
     """Tombstone vectors without rewriting any segment; queries stop
     returning them AND the centroids stop reflecting them (negative
     partials) — value-identical to a rebuild over the survivors."""
-    gpath, dead = open_index(path)
-    if isinstance(delete_ids, DataFrame):
-        ids = delete_ids.select("vec_id").distinct()
-    else:
-        ids = spark.createDataFrame(
-            [(int(i),) for i in delete_ids], "vec_id BIGINT"
-        )
-    tseg = segment if segment is not None else "del-" + uuid.uuid4().hex[:12]
-    _apply_delete(spark, gpath, ids, tseg=tseg, dead=dead)
+    _FAMILY.delete(spark, path, delete_ids, segment)
 
 
 # ------------------------------------------------------------------ query
@@ -844,7 +741,7 @@ def vector_topk_indexed(
     selector semantics)."""
     gpath, dead = open_index(path)
     cent = _merged_centroids(
-        drop_dead(_read_store(spark, gpath, "cstats"), dead)
+        drop_dead(_FAMILY.read(spark, gpath, "cstats"), dead)
     )
     cells = _live_cells(spark, gpath, dead)
     q = cells.where(F.col("vec_id") % query_mod == 0).select(
@@ -1152,11 +1049,11 @@ def vector_topk_pq(
         )
     gpath, dead = open_index(path)
     cent = _merged_centroids(
-        drop_dead(_read_store(spark, gpath, "cstats"), dead)
+        drop_dead(_FAMILY.read(spark, gpath, "cstats"), dead)
     )
     cells = _live_cells(spark, gpath, dead)
     if "codes" not in cells.columns:
-        # the empty-store fallback frame (_SCHEMAS["cells"]) carries no
+        # the empty-store fallback frame (the cells Store schema) has no
         # codes column; a typed null keeps the plan valid and yields
         # the correct empty result (posexplode of null emits no rows)
         cells = cells.withColumn(
@@ -1300,7 +1197,7 @@ def vector_match_index(
         # see a symmetric exclusion (r13 self-review)
         excl += [exclude_segment, f"{exclude_segment}.del"]
     cent = _merged_centroids(
-        drop_dead(_read_store(spark, gpath, "cstats"), excl)
+        drop_dead(_FAMILY.read(spark, gpath, "cstats"), excl)
     )
     cells = _live_cells(spark, gpath, excl)
     q = as_double_vec(queries).select(
@@ -1417,19 +1314,7 @@ def semantic_ingest_batch(
         spark, path, batch, tau=tau, n_probe=n_probe,
         exclude_segment=segment,
     )
-    (
-        verdicts.withColumn("segment", F.lit(segment))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("segment")
-        .parquet(verdicts_path)
-    )
-    stored = (
-        spark.read.parquet(verdicts_path)
-        .where(F.col("segment") == segment)
-        .drop("segment")
-    )
+    stored = persist_verdicts(verdicts, verdicts_path, segment)
     keepers = batch.join(
         stored.where(F.col("verdict") == "keep").select(
             F.col("vec_id")
@@ -1465,109 +1350,67 @@ def compact_vector_index(
     drifted from the cells it was trained on (Lucene's merge-time
     rebuild).  ``n_cells``/``train_iters`` default to the index's
     current config."""
-    gpath, dead = open_index(src)
-    man = read_manifest(src)
     meta = _read_index_meta(src)
-    if dst is None:
-        if man is None:
-            raise ValueError(
-                "compact_vector_index: pass dst=... for an unmanaged "
-                "index, or build with managed=True"
-            )
-        gen = next_generation(src)
-        out = os.path.join(src, gen)
-    else:
-        out = dst
-    live = _live_cells(spark, gpath, dead)
-    new_meta = dict(meta)
-    cb = None
-    pq_m = meta.get("pq_m")
-    pqbook = None
-    if retrain:
-        k = n_cells or meta.get("n_cells")
-        iters = train_iters or meta.get("train_iters", 2)
-        if k is None:
-            raise ValueError(
-                "compact_vector_index: retrain=True needs n_cells "
-                "(index has no stored k-means config)"
-            )
-        cb = _train_codebook(live.select("vec_id", "v", "norm"), k, iters)
-        asg = _assign_cells(
-            live.select("vec_id", "v", "norm"), cb
-        ).select("vec_id", F.col("cell").cast("int").alias("new_label"))
-        live = (
-            live.drop("label")
-            .join(asg, "vec_id")
-            .withColumnRenamed("new_label", "label")
-        )
-        new_meta.update(
-            {"quantizer": "kmeans", "n_cells": k, "train_iters": iters}
-        )
-        if pq_m is not None:
-            # retrain the PQ codebooks on the live corpus and re-encode
-            # inside the same rewrite (the identical staleness repair)
-            from redis_streams_spark.operators.similarity import (
-                pq_train_codebooks,
-            )
 
-            pqbook = pq_train_codebooks(
-                live.select("vec_id", "v", "norm"),
-                pq_m,
-                meta.get("pq_ksub", 8),
-                meta.get("pq_iters", 2),
+    def write(gpath: str, dead: list[str], out: str) -> None:
+        live = _live_cells(spark, gpath, dead)
+        new_meta = dict(meta)
+        cb = None
+        pq_m = meta.get("pq_m")
+        pqbook = None
+        if retrain:
+            k = n_cells or meta.get("n_cells")
+            iters = train_iters or meta.get("train_iters", 2)
+            if k is None:
+                raise ValueError(
+                    "compact_vector_index: retrain=True needs n_cells "
+                    "(index has no stored k-means config)"
+                )
+            cb = _train_codebook(live.select("vec_id", "v", "norm"), k, iters)
+            asg = _assign_cells(
+                live.select("vec_id", "v", "norm"), cb
+            ).select("vec_id", F.col("cell").cast("int").alias("new_label"))
+            live = (
+                live.drop("label")
+                .join(asg, "vec_id")
+                .withColumnRenamed("new_label", "label")
             )
-            live = _with_codes(live.drop("codes"), pqbook, pq_m)
-    else:
-        if meta["quantizer"] == "kmeans":
-            cb = _read_codebook(spark, gpath)  # carried over unchanged
-        if pq_m is not None:
-            pqbook = _read_pqbook(spark, gpath)  # carried over unchanged
-    live = live.persist()
-    cell_cols = ["vec_id", "v", "norm", "label"] + (
-        ["codes"] if pq_m is not None else []
-    )
-    try:
-        (
-            live.select(*cell_cols)
-            .withColumn("segment", F.lit("base"))
-            .repartition("label")
-            .write.mode("overwrite")
-            .partitionBy("segment", "label")
-            .parquet(f"{out}/cells")
-        )
-        (
-            _cstat_partials(live, "base")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("segment")
-            .parquet(f"{out}/cstats")
-        )
-        if cb is not None:
-            cb.write.mode("overwrite").parquet(f"{out}/codebook")
-        if pqbook is not None:
-            pqbook.write.mode("overwrite").parquet(f"{out}/pqbook")
-    finally:
-        live.unpersist()
-    if dst is None:
-        write_manifest(src, gen)
-        _write_index_meta(src, new_meta)
-    else:
-        _write_index_meta(dst, new_meta)
-    return out
+            new_meta.update(
+                {"quantizer": "kmeans", "n_cells": k, "train_iters": iters}
+            )
+            if pq_m is not None:
+                # retrain the PQ codebooks on the live corpus and
+                # re-encode inside the same rewrite (the identical
+                # staleness repair)
+                from redis_streams_spark.operators.similarity import (
+                    pq_train_codebooks,
+                )
 
+                pqbook = pq_train_codebooks(
+                    live.select("vec_id", "v", "norm"),
+                    pq_m,
+                    meta.get("pq_ksub", 8),
+                    meta.get("pq_iters", 2),
+                )
+                live = _with_codes(live.drop("codes"), pqbook, pq_m)
+        else:
+            if meta["quantizer"] == "kmeans":
+                cb = _read_codebook(spark, gpath)  # carried over unchanged
+            if pq_m is not None:
+                pqbook = _read_pqbook(spark, gpath)  # carried over unchanged
+        live = live.persist()
+        cell_cols = ["vec_id", "v", "norm", "label"] + (
+            ["codes"] if pq_m is not None else []
+        )
+        try:
+            _FAMILY.write(live.select(*cell_cols), out, "cells", TREE, "base")
+            _FAMILY.write(_cstat_partials(live, "base"), out, "cstats", TREE)
+            _write_quantizers(out, cb, pqbook)
+        finally:
+            live.unpersist()
+        _write_index_meta(src if dst is None else dst, new_meta)
 
-def _tombstone_entangled(
-    spark: SparkSession, gpath: str, segment: str
-) -> bool:
-    t = _read_optional(spark, f"{gpath}/tombstones")
-    if t is None:
-        return False
-    if segment.endswith(".del") or segment.startswith("del-"):
-        return True  # a delete batch: its negative partials correct others
-    return (
-        t.where(F.col("segment") == segment).limit(1).count() > 0
-        or t.where(F.col("tseg") == segment).limit(1).count() > 0
-    )
+    return compact_generation(src, dst, "compact_vector_index", write)
 
 
 def drop_vector_segment(spark: SparkSession, path: str, segment: str) -> None:
@@ -1577,18 +1420,16 @@ def drop_vector_segment(spark: SparkSession, path: str, segment: str) -> None:
     for tombstone-entangled segments — a delete batch's negative
     partials reference vectors in other segments, and dropping either
     side alone would skew the merged centroids; compaction is the
-    escape hatch (the invindex drop contract)."""
-    man = require_managed(path, "drop_vector_segment")
-    if segment in man["dead"]:
-        return  # idempotent
-    gpath = os.path.join(path, man["generation"])
-    if _tombstone_entangled(spark, gpath, segment):
-        raise ValueError(
-            f"drop_vector_segment: segment {segment!r} is tombstone-"
-            "entangled (delete partials reference it or it is a delete "
-            "batch) — compact_vector_index first"
-        )
-    drop_segment_metadata(path, segment)
+    escape hatch (see ``segstore.require_untangled``)."""
+    drop_segment_metadata(
+        path,
+        segment,
+        "drop_vector_segment",
+        lambda gpath: require_untangled(
+            spark, gpath, [segment], "drop_vector_segment",
+            "compact_vector_index",
+        ),
+    )
 
 
 def gc_vector_index(path: str, force: bool = False) -> list[str]:
@@ -1596,10 +1437,7 @@ def gc_vector_index(path: str, force: bool = False) -> list[str]:
     a managed root (generic segstore gc); run after the reader-drain
     window.  Refuses while a merge-in-flight marker exists unless
     ``force=True`` (see segstore.gc_generations)."""
-    # tombstone trees are partitioned by tseg, not segment, and delete
-    # batches are refused by drop_vector_segment — dead tombstone
-    # partitions cannot exist; old generations are reclaimed whole
-    return gc_generations(path, _STORES, force=force)
+    return gc_generations(path, tuple(_FAMILY.stores), force=force)
 
 
 def vector_index_maintenance_advice(
@@ -1641,8 +1479,8 @@ def vector_index_status(spark: SparkSession, path: str) -> DataFrame:
     """One row per live segment: (segment, n_vectors, n_tombstoned) —
     which batches exist and how much deletion churn has accumulated."""
     gpath, dead = open_index(path)
-    cells = drop_dead(_read_store(spark, gpath, "cells"), dead)
-    tomb = _tombstones(spark, gpath)
+    cells = drop_dead(_FAMILY.read(spark, gpath, "cells"), dead)
+    tomb = _FAMILY.tombstones(spark, gpath)
     per = cells.groupBy("segment").agg(F.count(F.lit(1)).alias("n_vectors"))
     if tomb is None:
         return per.withColumn(

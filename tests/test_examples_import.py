@@ -5,24 +5,17 @@ silently)."""
 
 from __future__ import annotations
 
+import glob
 import importlib.util
 import os
 
 import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-EXAMPLES = [
-    "consume_loop",
-    "llm_corpus_pipeline",
-    "retrieval_pipeline",
-    "streaming_native",
-    "event_analytics",
-    "growth_quality_audit",
-    "drift_monitor",
-    "retrieval_quality_session",
-    "dedup_tuning",
-    "multimodal_codecs",
-]
+EXAMPLES = sorted(
+    os.path.splitext(os.path.basename(p))[0]
+    for p in glob.glob(os.path.join(ROOT, "examples", "*.py"))
+)
 
 
 @pytest.mark.parametrize("name", EXAMPLES)

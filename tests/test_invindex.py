@@ -537,9 +537,9 @@ def test_drop_segment_matches_rebuild_without_batch(spark, tmp_path):
     build_inverted_index(keep, ref)
     assert _bm25(spark, root) == _bm25(spark, ref)
     # stats partials: the dropped batch's corpus contribution is gone
-    from redis_streams_spark.operators.invindex import (
-        _open_index,
-        _stats_totals,
+    from redis_streams_spark.operators.invindex import _stats_totals
+    from redis_streams_spark.operators.segstore import (
+        open_index as _open_index,
     )
 
     gpath, dead = _open_index(root)
@@ -574,8 +574,10 @@ def test_merge_segments_and_gc(spark, tmp_path):
     the merged-away partitions and the swapped-out generation."""
     import os
 
+    from redis_streams_spark.operators.segstore import (
+        read_manifest as _read_manifest,
+    )
     from redis_streams_spark.operators.invindex import (
-        _read_manifest,
         compact_inverted_index,
         gc_index,
         merge_segments,

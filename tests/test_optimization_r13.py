@@ -163,8 +163,10 @@ def test_read_optional_cache_invalidates_on_mutation(spark, tmp_path):
 def test_term_meta_single_collect_matches_two_jobs(spark, tmp_path):
     """_term_meta (one crossJoin'd collect) must return exactly what the
     replaced pair of jobs (terms agg collect + stats first()) returned."""
+    from redis_streams_spark.operators.segstore import (
+        open_index as _open_index,
+    )
     from redis_streams_spark.operators.invindex import (
-        _open_index,
         _query_frames,
         _stats_totals,
         _term_meta,

@@ -119,8 +119,10 @@ def test_bm25_meta_frames_match_store_aggregation(spark, tmp_path):
     """bm25_topk_indexed with the router's collected metadata
     (LocalRelation dfreq/stats) must return exactly what the
     store-aggregating form returns — same docs, same doubles."""
+    from redis_streams_spark.operators.segstore import (
+        open_index as _open_index,
+    )
     from redis_streams_spark.operators.invindex import (
-        _open_index,
         _query_frames,
         _term_meta,
         bm25_topk_indexed,
