@@ -94,6 +94,7 @@ from redis_streams_spark.operators.segstore import (
     persist_verdicts,
     read_manifest,
     read_optional,
+    write_json,
 )
 
 __all__ = [
@@ -157,9 +158,7 @@ _FAMILY = Family(
 
 
 def _write_meta(path: str, n: int, shingles: bool = True) -> None:
-    with open(os.path.join(path, "META"), "w", encoding="utf-8") as fh:
-        json.dump({"n": n, "shingles": shingles}, fh)
-        fh.write("\n")
+    write_json(os.path.join(path, "META"), {"n": n, "shingles": shingles})
 
 
 def _read_meta_dict(path: str) -> dict:

@@ -65,6 +65,7 @@ from redis_streams_spark.operators.segstore import (
     persist_verdicts,
     read_optional,
     refuse_dead,
+    write_json,
 )
 
 __all__ = [
@@ -92,8 +93,8 @@ _FAMILY = Family(
 
 
 def _write_meta(path: str, n: int) -> None:
-    with open(os.path.join(path, _META_FILE), "w") as f:
-        json.dump({"kind": "gram", "n": n, "buckets": N_BUCKETS}, f)
+    meta = {"kind": "gram", "n": n, "buckets": N_BUCKETS}
+    write_json(os.path.join(path, _META_FILE), meta)
 
 
 def read_gram_meta(path: str) -> dict:

@@ -639,8 +639,12 @@ def _query_frames(
     tpart = drop_dead(_FAMILY.read(spark, gpath, "terms"), dead).where(
         F.col("bucket").isin(buckets)
     )
-    stats = _stats_totals(spark, gpath, dead).select(
-        "n", (F.col("sdl") * 1.0 / F.col("n")).alias("avgdl")
+    # an empty live total (every document deleted) becomes a NULL n, as
+    # in _meta_frames: a 0 would raise DIVIDE_BY_ZERO under ANSI mode
+    stats = (
+        _stats_totals(spark, gpath, dead)
+        .select(F.nullif("n", F.lit(0)).alias("n"), "sdl")
+        .select("n", (F.col("sdl") * 1.0 / F.col("n")).alias("avgdl"))
     )
     return postings, tpart, stats
 

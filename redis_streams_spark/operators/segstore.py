@@ -372,14 +372,22 @@ def write_layout(gpath: str, layout: dict) -> None:
     segment write of a generation (after its first store write
     succeeds) and copied by compaction, so every reader and every later
     ingest of that generation agrees on the layout without a global
-    constant.  Atomic rename like the MANIFEST."""
+    constant."""
     local = _local_path(gpath)
     os.makedirs(local, exist_ok=True)
-    tmp = os.path.join(local, f".{LAYOUT}.{uuid.uuid4().hex[:8]}")
+    write_json(os.path.join(local, LAYOUT), layout)
+
+
+def write_json(path: str, payload: dict) -> None:
+    """Write a small metadata file (MANIFEST, LAYOUT, a family's META)
+    by tmp + rename: serialized before disk is touched, and readers see
+    the old file or the new one, never a torn one."""
+    text = json.dumps(payload) + "\n"
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex[:8]}")
     with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(layout, fh)
-        fh.write("\n")
-    os.replace(tmp, os.path.join(local, LAYOUT))
+        fh.write(text)
+    os.replace(tmp, path)
 
 
 def read_layout(gpath: str) -> dict | None:
@@ -627,22 +635,13 @@ def write_manifest(
     dead: list[str] | tuple[str, ...] = (),
     pending: list[str] | tuple[str, ...] = (),
 ) -> None:
-    """Write the commit point LAST, via rename: readers see either the
-    old commit point or the new one, never a partial file (POSIX/HDFS
-    rename is atomic; an object-store port would use a conditional put
-    here)."""
-    tmp = os.path.join(path, f".{MANIFEST}.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(
-            {
-                "generation": gen,
-                "dead": sorted(dead),
-                "pending": sorted(pending),
-            },
-            fh,
-        )
-        fh.write("\n")
-    os.replace(tmp, os.path.join(path, MANIFEST))
+    """Write the commit point LAST, via :func:`write_json`'s rename
+    (POSIX/HDFS rename is atomic; an object-store port would use a
+    conditional put here)."""
+    write_json(
+        os.path.join(path, MANIFEST),
+        {"generation": gen, "dead": sorted(dead), "pending": sorted(pending)},
+    )
 
 
 def next_generation(path: str) -> str:

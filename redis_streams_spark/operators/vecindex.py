@@ -104,6 +104,7 @@ from redis_streams_spark.operators.segstore import (
     read_manifest,
     read_optional,
     require_untangled,
+    write_json,
 )
 
 __all__ = [
@@ -125,9 +126,7 @@ _META_FILE = "INDEXMETA"
 
 
 def _write_index_meta(path: str, meta: dict) -> None:
-    with open(os.path.join(path, _META_FILE), "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-        fh.write("\n")
+    write_json(os.path.join(path, _META_FILE), meta)
 
 
 def _read_index_meta(path: str) -> dict:

@@ -30,6 +30,20 @@ semantics vary by mount options, and object stores have no flock at all
 (compare-and-swap on the manifest/group-state etag), which the
 update_group(mutator) API is shaped for: the mutator re-runs on a CAS
 conflict.
+
+Revision token: each group's ``groups/<name>.json.lock`` file carries a
+random token that every writer of the group file replaces (before its
+``os.replace``) while holding the flock.  ``update_group`` keeps the
+state dict this instance last committed together with the token it
+wrote; when the token under the lock is still that one, no other writer
+has run since and the cached dict is the file's content, so the commit
+skips re-reading and re-parsing the group JSON.  Any other token (another
+instance's write, a writer that died between the token and the rename,
+a lock file created afresh) makes it reload the file.  The token is the
+file-store form of the group-state etag above: an object-store port
+compares the same revision in its conditional put.  Because the lock
+file now carries state, it must not be deleted while the group is in
+use.
 """
 
 from __future__ import annotations
@@ -45,16 +59,27 @@ from contextlib import contextmanager
 
 
 _INDEX_STEP = 256  # sparse offset-index granularity for read_slice
+_TOKEN_LEN = 32  # bytes of a group revision token (uuid4 hex)
 
 
 def _atomic_write(path: str, payload: dict) -> None:
+    # json.dumps, not json.dump(payload, f): dump streams through the
+    # pure-Python iterencode, dumps takes the C encoder
+    text = json.dumps(payload)
     # tmp name must be unique per writer (pid AND thread — concurrent
     # consumers may share a process), else writers clobber each other's
     # staging file mid-rename
     tmp = f"{path}.tmp.{os.getpid()}.{threading.get_ident()}.{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
-        json.dump(payload, f)
+        f.write(text)
     os.replace(tmp, path)
+
+
+def _bump_revision(lock) -> bytes:
+    """Write a fresh revision token into a held group lock file."""
+    token = uuid.uuid4().hex.encode()
+    os.pwrite(lock.fileno(), token, 0)
+    return token
 
 
 class StreamLog:
@@ -65,23 +90,27 @@ class StreamLog:
         self.log_path = os.path.join(self.dir, "log.jsonl")
         self.meta_path = os.path.join(self.dir, "meta.json")
         self.groups_dir = os.path.join(self.dir, "groups")
-        # created eagerly: a lazy check-then-set in stream_lock() would let
+        # created eagerly: a lazy check-then-set in _flock() would let
         # racing threads clobber each other's threading.local and leak fds
         self._lock_tl = threading.local()
+        # group -> (revision token, state this instance last committed)
+        self._group_cache: dict[str, tuple[bytes, dict]] = {}
         os.makedirs(self.groups_dir, exist_ok=True)
 
-    # threading.local (and any cached lock fd / offset index) cannot and
-    # must not cross a pickle boundary — DataSource partitions serialize
-    # StreamLog to executors; each deserialized copy gets fresh locals
+    # threading.local (and any cached lock fd / offset index / group
+    # state) cannot and must not cross a pickle boundary — DataSource
+    # partitions serialize StreamLog to executors; each deserialized copy
+    # gets fresh locals
     def __getstate__(self) -> dict:
         state = self.__dict__.copy()
-        for k in ("_lock_tl", "_offset_index", "_index_first"):
+        for k in ("_lock_tl", "_group_cache", "_offset_index", "_index_first"):
             state.pop(k, None)
         return state
 
     def __setstate__(self, state: dict) -> None:
         self.__dict__.update(state)
         self._lock_tl = threading.local()
+        self._group_cache = {}
 
     # -- meta ------------------------------------------------------------
     def _meta(self) -> dict:
@@ -108,30 +137,74 @@ class StreamLog:
             return None
         return f"{m['last_ms']}-{m['last_seq']:06d}"
 
-    # -- append / read / trim -------------------------------------------
+    # -- locks -----------------------------------------------------------
     @contextmanager
+    def _flock(self, path: str):
+        """Hold the advisory exclusive flock on ``path``; yields the lock
+        file, opened read-write and never truncated (group lock files
+        carry the revision token).
+
+        The handle is cached per (instance, thread, path) — reopening
+        per append measurably halves single-message producer throughput.
+        flock excludes per open-file-description, so the cache must be
+        thread-local: two threads sharing one fd would both "hold" the
+        lock; with per-thread fds, threads, instances, and processes all
+        exclude each other correctly.  A handle inherited across fork, or
+        one whose file was unlinked since it was opened, would no longer
+        exclude anyone, so it is reopened.  Re-entrant per thread: a
+        nested hold (``save_group`` inside ``group_lock``) must not
+        release the outer one early."""
+        tl = self._lock_tl
+        files = getattr(tl, "files", None)
+        if files is None:
+            files = tl.files = {}
+        pid = os.getpid()
+        entry = files.get(path)  # [file, pid, hold depth]
+        if entry is not None and entry[1] == pid and entry[2]:
+            entry[2] += 1
+            try:
+                yield entry[0]
+            finally:
+                entry[2] -= 1
+            return
+        while True:
+            if entry is None or entry[1] != pid:
+                fd = os.open(path, os.O_RDWR | os.O_CREAT, 0o666)
+                entry = files[path] = [os.fdopen(fd, "r+b", buffering=0), pid, 0]
+            f = entry[0]
+            fcntl.flock(f, fcntl.LOCK_EX)
+            try:
+                if os.path.samestat(os.fstat(f.fileno()), os.stat(path)):
+                    break
+            except FileNotFoundError:
+                pass
+            fcntl.flock(f, fcntl.LOCK_UN)
+            f.close()
+            entry = None
+        entry[2] = 1
+        try:
+            yield f
+        finally:
+            entry[2] = 0
+            fcntl.flock(f, fcntl.LOCK_UN)
+
     def stream_lock(self):
         """Advisory exclusive lock serializing log+meta read-modify-write
         (append/trim).  Redis XADD is atomic server-side; without this,
         two concurrent producers both read appended=N and one message
         becomes permanently invisible (meta undercount) or duplicate
-        msgids get minted from a clobbered last_ms/last_seq.
+        msgids get minted from a clobbered last_ms/last_seq."""
+        return self._flock(os.path.join(self.dir, "stream.lock"))
 
-        The lock-file handle is cached per (instance, thread) — reopening
-        per append measurably halves single-message producer throughput.
-        flock excludes per open-file-description, so the cache must be
-        thread-local: two threads sharing one fd would both "hold" the
-        lock; with per-thread fds, threads, instances, and processes all
-        exclude each other correctly."""
-        tl = self._lock_tl
-        f = getattr(tl, "f", None)
-        if f is None or f.closed:
-            f = tl.f = open(os.path.join(self.dir, "stream.lock"), "w")
-        fcntl.flock(f, fcntl.LOCK_EX)
-        try:
-            yield
-        finally:
-            fcntl.flock(f, fcntl.LOCK_UN)
+    def group_lock(self, group: str):
+        """Advisory exclusive lock for read-modify-write of group state —
+        serializes concurrent consumers/readers of the same group the way
+        Redis serializes XREADGROUP/XACK (single-threaded server).  Every
+        writer of the group file holds it, and the lock file carries the
+        group's revision token (module docstring)."""
+        return self._flock(self._group_path(group) + ".lock")
+
+    # -- append / read / trim -------------------------------------------
 
     def append(self, content: dict, maxlen: int | None = None) -> str:
         """Append one message; returns its msgid.  With ``maxlen`` the log
@@ -327,8 +400,9 @@ class StreamLog:
         (caught as an exact-batch-size duplicate burst by
         test_concurrent_consumers.py once the drain was synchronized)."""
         if not os.path.exists(self._group_path(group)):
-            with self.group_lock(group):
+            with self.group_lock(group) as lock:
                 if not os.path.exists(self._group_path(group)):
+                    _bump_revision(lock)
                     _atomic_write(self._group_path(group), self._empty_group())
 
     @staticmethod
@@ -348,28 +422,32 @@ class StreamLog:
             return json.load(f)
 
     def save_group(self, group: str, state: dict) -> None:
-        _atomic_write(self._group_path(group), state)
-
-    @contextmanager
-    def group_lock(self, group: str):
-        """Advisory exclusive lock for read-modify-write of group state —
-        serializes concurrent consumers/readers of the same group the way
-        Redis serializes XREADGROUP/XACK (single-threaded server)."""
-        lock_path = self._group_path(group) + ".lock"
-        with open(lock_path, "w") as f:
-            fcntl.flock(f, fcntl.LOCK_EX)
-            try:
-                yield
-            finally:
-                fcntl.flock(f, fcntl.LOCK_UN)
+        with self.group_lock(group) as lock:
+            _bump_revision(lock)
+            _atomic_write(self._group_path(group), state)
 
     def update_group(self, group: str, mutator: Callable[[dict], object]) -> object:
         """Atomically read-modify-write group state under the lock; the
-        mutator's return value is passed through."""
-        with self.group_lock(group):
-            state = self.group_state(group)
+        mutator's return value is passed through.
+
+        The state handed to the mutator is the dict this instance last
+        committed when the lock file's revision token is still the one
+        it wrote, else the file's content (module docstring).  So a
+        mutator must keep the state JSON-shaped (str keys, lists) and
+        must not keep references into it after it returns.  The cache
+        entry is taken out before the mutator runs: a mutator or write
+        that raises leaves nothing cached."""
+        with self.group_lock(group) as lock:
+            token = os.pread(lock.fileno(), _TOKEN_LEN, 0)
+            cached = self._group_cache.pop(group, None)
+            if cached is not None and cached[0] == token:
+                state = cached[1]
+            else:
+                state = self.group_state(group)
             result = mutator(state)
-            self.save_group(group, state)
+            token = _bump_revision(lock)
+            _atomic_write(self._group_path(group), state)
+            self._group_cache[group] = (token, state)
             return result
 
     def list_groups(self) -> list[str]:
@@ -382,4 +460,7 @@ class StreamLog:
     def destroy_group(self, group: str) -> None:
         p = self._group_path(group)
         if os.path.exists(p):
-            os.remove(p)
+            with self.group_lock(group) as lock:
+                _bump_revision(lock)
+                if os.path.exists(p):
+                    os.remove(p)

@@ -1,8 +1,9 @@
 """The shared segment lifecycle (operators/segstore.py) and the term
 bucket layout the inverted index pins through it: rebuilds re-pin the
 layout, appends to pre-layout generations keep the historical bucket
-count, unknown input sizes do not inflate it, and a query whose terms
-all miss the index answers empty under either ANSI setting."""
+count, unknown input sizes do not inflate it, a query whose terms all
+miss the index (or whose documents were all deleted) answers empty
+under either ANSI setting, and metadata files are replaced atomically."""
 
 from __future__ import annotations
 
@@ -17,6 +18,7 @@ from redis_streams_spark.operators.invindex import (
     bm25_topk_auto,
     bm25_topk_indexed,
     build_inverted_index,
+    delete_from_inverted_index,
     update_inverted_index,
 )
 from redis_streams_spark.operators.segstore import LAYOUT, read_layout
@@ -151,6 +153,59 @@ def test_all_unknown_term_query_is_empty(spark, tmp_path):
             assert [tuple(r) for r in stats.collect()] == [(None, None)], ansi
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_query_over_fully_deleted_index_is_empty(spark, tmp_path):
+    """Once every document is deleted the live corpus total is n = 0;
+    the query frames must carry that as a NULL n (as ``_meta_frames``
+    does), not divide by it — the exact and the routed scorer return
+    empty under ANSI on and off.  As in the all-unknown-term test, the
+    full query only races into the division under adaptive execution,
+    so the stats frame of the shared read path is evaluated too."""
+    from redis_streams_spark.operators.invindex import _query_frames
+    from redis_streams_spark.operators.segstore import open_index
+
+    path = str(tmp_path / "idx")
+    build_inverted_index(_docs(spark, n=10), path, managed=True)
+    delete_from_inverted_index(spark, path, list(range(10)))
+    queries = {0: ("spark",), 1: ("stream", "w1")}
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            assert bm25_topk_indexed(spark, path, queries, k=5).collect() == []
+            assert bm25_topk_auto(spark, path, queries, k=5).collect() == []
+            gpath, dead = open_index(path)
+            _, _, stats = _query_frames(spark, gpath, {"spark"}, dead)
+            assert [tuple(r) for r in stats.collect()] == [(None, None)], ansi
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_failed_meta_serialization_keeps_previous_meta(tmp_path):
+    """Index metadata goes through segstore's tmp + rename writer: a
+    payload that cannot be serialized leaves the previous META readable
+    and no staging file behind."""
+    from redis_streams_spark.operators import dupindex, gramindex, vecindex
+
+    cases = [
+        (dupindex._write_meta, dupindex._read_meta_dict),
+        (gramindex._write_meta, gramindex.read_gram_meta),
+        (
+            lambda p, v: vecindex._write_index_meta(p, {"quantizer": v}),
+            vecindex._read_index_meta,
+        ),
+    ]
+    for i, (write, read) in enumerate(cases):
+        d = tmp_path / str(i)
+        d.mkdir()
+        write(str(d), 4)
+        before = read(str(d))
+        assert 4 in before.values(), before
+        with pytest.raises(TypeError):
+            write(str(d), {"not", "json"})
+        assert read(str(d)) == before
+        assert len(os.listdir(d)) == 1, os.listdir(d)
 
 
 def test_family_modules_leave_partitioned_writes_to_segstore():
